@@ -837,10 +837,11 @@ def apply_funnel(df: DataFrame,
 
 
 # split-size hint cache for split_leakage: plan semanticHash →
-# (n_eval, n_train). Perf-only (drives spread decisions); stale entries
-# cannot change output — same contract and caveats as
-# dedup._DUP_STATS_MEMO (call-site note there).
-_SPLIT_SIZE_MEMO: dict[tuple, tuple[int, int]] = {}
+# (n_eval, n_train, eval_chars); eval_chars is None until a
+# prune="auto" call has sampled it. Perf-only (drives spread and tier
+# decisions); stale entries cannot change output — same contract and
+# caveats as dedup._DUP_STATS_MEMO (call-site note there).
+_SPLIT_SIZE_MEMO: dict[tuple, tuple[int, int, int | None]] = {}
 
 
 def _doc_gram_offsets(ts: list, n: int):
@@ -939,28 +940,33 @@ def split_leakage(df: DataFrame, id_col: str = "doc_id",
         memo_key = (df.semanticHash(), split_col, train, text_col)
     except Exception:
         pass
-    if memo_key is not None and memo_key in _SPLIT_SIZE_MEMO:
-        n_ev, n_tr, ev_chars = _SPLIT_SIZE_MEMO[memo_key]
+    hit = _SPLIT_SIZE_MEMO.get(memo_key) if memo_key is not None else None
+    if hit is not None:
+        n_ev, n_tr, ev_chars = hit
     else:
         cnt = {r["__t"]: r["count"] for r in
                df.groupBy(is_train.alias("__t")).count().collect()}
         n_ev, n_tr = cnt.get(False, 0), cnt.get(True, 0)
+        ev_chars = None
+    if ev_chars is None and prune == "auto":
         # eval char volume ESTIMATE for the auto tier ladder: a
         # 2000-doc limit sample (early-stopping scan — the counting
         # job above stays column-pruned to split_col, so neither
-        # sizing job reads the full text at corpus scale)
+        # sizing job reads the full text at corpus scale). Taken on a
+        # memo hit too when an explicit-tier call stored the counts
+        # without it.
         ev_chars = 0
-        if n_ev > 0 and prune == "auto":
+        if n_ev > 0:
             samp = (df.filter(~is_train)
                     .select(F.length(F.coalesce(F.col(text_col),
                                                 F.lit("")))
                             .alias("__l"))
                     .limit(2000).agg(F.avg("__l")).first()[0]) or 0
             ev_chars = int(samp * n_ev)
-        if memo_key is not None:
-            if len(_SPLIT_SIZE_MEMO) > 256:
-                _SPLIT_SIZE_MEMO.clear()
-            _SPLIT_SIZE_MEMO[memo_key] = (n_ev, n_tr, ev_chars)
+    if memo_key is not None and hit != (n_ev, n_tr, ev_chars):
+        if len(_SPLIT_SIZE_MEMO) > 256:
+            _SPLIT_SIZE_MEMO.clear()
+        _SPLIT_SIZE_MEMO[memo_key] = (n_ev, n_tr, ev_chars)
     par = df.sparkSession.sparkContext.defaultParallelism
 
     if prune == "auto":

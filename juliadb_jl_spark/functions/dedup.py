@@ -4,14 +4,16 @@ embedding-cosine near-dup.
 Scale design (100 TB documents):
   * exact dedup — hash-groupBy on a normalized fingerprint: one shuffle.
   * n-gram Jaccard — shingle-inverted-index self-join: only docs sharing a
-    shingle are paired (never O(n²)); an optional document-frequency cap
-    drops ubiquitous shingles to bound skew.
-  * MinHash+LSH — signatures via xxhash64 (native, JVM-side), banded; only
-    same-band buckets join; candidates verified with exact Jaccard.
+    shingle are paired (never O(n²)), each pair's intersection counted
+    in one aggregation; an optional document-frequency cap drops
+    ubiquitous shingles to bound skew.
+  * MinHash+LSH — crc32perm signatures in one fused Arrow pass per doc,
+    banded; only same-band buckets join; candidates verified with exact
+    Jaccard.
   * SimHash — 64-bit signature from token hashes, computed with native
     bit-arithmetic aggregates after an explode; near-dups blocked by
     16-bit bands, verified by hamming distance.
-Everything is DataFrame-native; no Python UDFs in any hot path.
+Everything is DataFrame-native; Python runs only inside vectorized Arrow UDFs.
 """
 
 from __future__ import annotations
@@ -382,11 +384,8 @@ def _auto_cap(counts: DataFrame, floor: int = 64,
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str = "text",
                         k: int = 3, threshold: float = 0.5,
                         df_cap: int | str | None = None,
-                        broadcast_verify: bool | None = None,
-                        broadcast_threshold_bytes: int = 1 << 30,
                         unique_lift: bool = True,
-                        star_intra: bool = False,
-                        verify: str = "count") -> DataFrame:
+                        star_intra: bool = False) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard ≥ threshold.
 
     Exact semantics: candidates = docs sharing ≥1 shingle (a pair below
@@ -398,42 +397,13 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     pathological — still opt-in, because engaging it IS opting into
     lossiness; like any cap it disables the unique-text lift.
 
-    AllPairs-style prefix filtering (exact, no recall loss): with shingles
-    in a global total order (sorted xxhash64), any pair with Jaccard ≥ t
-    must share an element among each side's first n−⌈t·n⌉+1 shingles —
-    a suffix-only overlap can contribute at most ⌈t·n⌉−1 < t·n elements.
-    So only the prefixes are indexed and self-joined (quarter the fanout),
-    candidates get a size filter (t·na ≤ nb ∧ t·nb ≤ na), and the few
-    survivors are verified exactly with array_intersect.
-
-    `verify="count"` (default, r9): skip the prefix/verify split —
-    full inverted-index self-join + one codegen count aggregation gives
-    every pair's exact intersection directly (no array_intersect, no
-    verify join; measured 2.6× on the q35 kernel, identical output —
-    differential-tested against `verify="arrays"`, the prefix+
-    array_intersect path above, which `broadcast_verify`/
-    `broadcast_threshold_bytes` configure).
-
-    `broadcast_verify=None` (default) is size-aware auto: the shingle-hash
-    side is estimated from Catalyst's plan statistics for the input
-    (`optimizedPlan().stats().sizeInBytes` — file sizes for parquet scans,
-    actual bytes for local/cached data; NO extra job) and broadcast only
-    when the estimate times a conservative ×8 expansion factor is under
-    `broadcast_threshold_bytes` (default 1 GiB).  The factor covers
-    parquet/zstd text compressing 3–10× on disk plus array/object
-    overhead of the broadcast rows (ADVICE r2: a raw file-scan size can
-    understate in-memory broadcast size severalfold).  Unknown statistics
-    estimate as Long.Max → the shuffled verify join.  The auto path is
-    deliberately biased toward shuffling: a needless shuffle costs
-    seconds, a needless broadcast can cost the driver."""
+    One index, one join: a flat (id, n, h) inverted index — one row per
+    distinct shingle hash of each doc, n = the doc's set size — is
+    self-joined on h under the size filter t·na ≤ nb ∧ t·nb ≤ na, and
+    one codegen count aggregation per pair gives its exact intersection
+    directly.  A cap anti-joins the hot h out of that same index and
+    recounts n."""
     t = float(threshold)
-    if verify not in ("count", "arrays"):
-        raise ValueError(f"verify must be 'count' or 'arrays', got {verify!r}")
-    if verify == "count" and broadcast_verify is not None:
-        # an EXPLICIT broadcast_verify is a plan choice that only the
-        # arrays path implements — honor it (pre-r9 semantics) instead
-        # of silently ignoring the argument on the count path
-        verify = "arrays"
     if unique_lift and not df_cap:
         # duplicate-dense corpora (every web crawl): shingle + verify
         # only one representative per distinct text, lift pairs back to
@@ -442,140 +412,75 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str = "text",
         # Engage on EITHER trigger: dup mass ≥ 20% (lift pays for itself,
         # measured -19 s at sf1), OR an estimated exact-dup cluster of
         # ≥256 members even in an otherwise-unique corpus — a clique of
-        # identical docs makes the direct prefix self-join quadratic in
-        # the clique (every member shares every prefix shingle), while
-        # the lift reduces it to ONE representative.
+        # identical docs makes the direct self-join quadratic in the
+        # clique (every member shares every shingle), while the lift
+        # reduces it to ONE representative.
         dup_frac, est_max = _dup_stats(df, id_col, text_col)
         if dup_frac >= 0.2 or est_max >= 256:
             return _unique_text_lift(
                 df, id_col, text_col, k,
                 lambda rep_df: ngram_jaccard_pairs(
                     rep_df, id_col, text_col, k=k, threshold=threshold,
-                    df_cap=None, broadcast_verify=broadcast_verify,
-                    broadcast_threshold_bytes=broadcast_threshold_bytes,
-                    unique_lift=False, verify=verify), star=star_intra)
-    sets_ = _shingle_sets(df, id_col, text_col, k)
-    hashed = None
-    if verify == "arrays" or df_cap:
-        hashed = sets_.select(
-            "id",
-            F.array_sort(F.transform("shset",
-                                     lambda s: F.xxhash64(s))).alias("hs"))
-        hashed = hashed.withColumn("n", F.size("hs"))
-        # hashed feeds three branches (prefix index + both verify
-        # sides) — persist so the shingle pass runs once, as a
-        # multi-pass algorithm should (spills to disk at scale; ~1%
-        # the size of the raw corpus)
-        hashed = scratch.register(hashed.persist())
-    if df_cap == "auto":
-        # one histogram agg over the persisted shingle pass decides from
-        # the corpus's own df distribution; None → the exact path below
-        df_cap = _auto_cap(hashed.select(F.explode("hs").alias("h"))
-                           .groupBy("h").count())
-    if df_cap:
-        flat = hashed.select("id", F.explode("hs").alias("h"))
-        hot = flat.groupBy("h").count().filter(F.col("count") > df_cap).select("h")
-        kept = (flat.join(hot, "h", "left_anti").groupBy("id")
-                .agg(F.array_sort(F.collect_list("h")).alias("hs")))
-        hashed = kept.withColumn("n", F.size("hs"))
+                    df_cap=None, unique_lift=False), star=star_intra)
     p = df.sparkSession.sparkContext.defaultParallelism
-    if verify == "count":
-        # r9: count-based exact intersection — full inverted-index
-        # self-join + ONE codegen hash aggregation, no per-pair
-        # array_intersect and no verify join at all.  ~4× the prefix
-        # join's fanout (suffix elements index too) but each row is a
-        # 24-byte count-agg input instead of a pair of full shingle
-        # arrays fed to an interpreted set intersect: measured 2.6×
-        # on the q35 kernel, identical output (pairs sharing only
-        # suffix elements stay below t by the prefix lemma and fall to
-        # the jaccard filter).  The quadratic hot-shingle risk is the
-        # same class as the prefix join's and keeps the same guards
-        # (unique-text lift, df_cap, explicit spread).
-        #
-        # Index construction: with no df_cap there is no hs array at
-        # all — explode the shingle SET and hash natively per row
-        # (codegen xxhash64; no interpreted transform-HOF, no
-        # array_sort).  The flat index is persisted POST-repartition so
-        # the Arrow shingle pass runs once and the self-join fanout
-        # stays spread (identical-subtree aliases do NOT get exchange
-        # reuse in the AQE initial plan — measured 3× CPU without the
-        # persist; and although canChangeCachedPlanOutputPartitioning
-        # =true means both join sides re-exchange the cache with
-        # ENSURE_REQUIREMENTS, dropping this repartition measured 60%
-        # WORSE CPU in r10 — the cache-build layout matters even when
-        # its partitioning is invisible to downstream planning).
-        # 24 B/row, ~1-2 % of corpus bytes.
-        #
-        # Examined and REJECTED (r10, VERDICT r9 #2): a PPJoin-style
-        # positional filter in the join condition — index each
-        # shingle's 1-based position in a global order and prune rows
-        # where min(pa,pb)+min(na-pa,nb-pb) < t(na+nb)/(1+t) (sound:
-        # at-or-above-threshold pairs keep every row since the bound
-        # dominates their true intersection).  Measured at sf0.1:
-        # prunes 0.3% of join rows (candidate pairs here are
-        # overwhelmingly TRUE near-dup pairs, which positional bounds
-        # cannot prune) while the array_sort+posexplode index build
-        # costs ~10% CPU — net loss 0.83→0.87 s wall, 7.5→8.3 CPU-s.
-        if hashed is not None:
-            flat = hashed.select("id", "n", F.explode("hs").alias("h"))
-        else:
-            flat = (sets_.select("id", F.size("shset").alias("n"),
-                                 F.explode("shset").alias("sh"))
-                    .select("id", "n", F.xxhash64("sh").alias("h")))
-        flat = scratch.register(flat.repartition(p, "h").persist())
-        fa, fb = flat.alias("a"), flat.alias("b")
-        pc = (fa.join(fb.hint("shuffle_hash"),
-                      (F.col("a.h") == F.col("b.h")) &
-                      (F.col("a.id") < F.col("b.id")) &
-                      (F.col("b.n") >= F.col("a.n") * t) &
-                      (F.col("a.n") >= F.col("b.n") * t))
-              .groupBy(F.col("a.id").alias("id_a"),
-                       F.col("b.id").alias("id_b"),
-                       F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
-              .agg(F.count(F.lit(1)).alias("inter")))
-        return (pc.withColumn(
-                    "jaccard",
-                    F.col("inter") / (F.col("na") + F.col("nb")
-                                      - F.col("inter")))
-                .filter(F.col("jaccard") >= t)
-                .select("id_a", "id_b", "jaccard"))
-    if broadcast_verify is None:
-        est_bytes = int(df._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        # ×8: on-disk (compressed) bytes → in-memory broadcast bytes
-        broadcast_verify = 0 <= est_bytes * 8 <= broadcast_threshold_bytes
-    pref_len = (F.col("n") - F.ceil(F.col("n") * t) + 1).cast("int")
-    idx = hashed.select("id", "n",
-                        F.explode(F.slice("hs", 1, pref_len)).alias("h"))
-    # The prefix self-join fans out from a byte-small input; planner/AQE
-    # size heuristics would run it in one task via broadcast. Explicit
-    # co-partitioning by shingle hash keeps the fanout spread out.
-    idx = idx.repartition(p, "h")
-    a, b = idx.alias("a"), idx.alias("b")
-    # candidate pairs are kept WITH duplicates (a pair sharing k prefix
-    # shingles appears k times, typically ~7% extra) — verifying the dupes
-    # is cheaper than a full distinct shuffle; dedup happens on the tiny
-    # post-threshold result instead
-    cand = (a.join(b.hint("shuffle_hash"),
-                   (F.col("a.h") == F.col("b.h")) &
-                   (F.col("a.id") < F.col("b.id")) &
-                   (F.col("b.n") >= F.col("a.n") * t) &
-                   (F.col("a.n") >= F.col("b.n") * t))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
-    ha = hashed.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"),
-                       F.col("n").alias("na"))
-    hb = hashed.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"),
-                       F.col("n").alias("nb"))
-    if broadcast_verify:
-        # the shingle-set side is ~1-2% of corpus bytes; broadcastable up
-        # to ~10s of GB. For corpora where even that is too big, pass
-        # False and the verify joins become standard shuffled joins.
-        ha, hb = F.broadcast(ha), F.broadcast(hb)
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    return (cand.join(ha, "id_a").join(hb, "id_b")
-            .withColumn("jaccard", inter / (F.col("na") + F.col("nb") - inter))
+    # Index construction: explode the shingle SET and hash natively per
+    # row (codegen xxhash64).  The index is persisted POST-repartition so the
+    # Arrow shingle pass runs once and the self-join fanout stays
+    # spread (identical-subtree aliases do NOT get exchange reuse in
+    # the AQE initial plan — measured 3× CPU without the persist; and
+    # although canChangeCachedPlanOutputPartitioning=true means both
+    # join sides re-exchange the cache with ENSURE_REQUIREMENTS,
+    # dropping this repartition measured 60% WORSE CPU in r10 — the
+    # cache-build layout matters even when its partitioning is
+    # invisible to downstream planning).  24 B/row, ~1-2 % of corpus
+    # bytes.  The hot-shingle quadratic risk of the self-join is
+    # guarded by the unique-text lift above and by df_cap.
+    #
+    # Examined and REJECTED (r10, VERDICT r9 #2): a PPJoin-style
+    # positional filter in the join condition — index each shingle's
+    # 1-based position in a global order and prune rows where
+    # min(pa,pb)+min(na-pa,nb-pb) < t(na+nb)/(1+t) (sound: at-or-above-
+    # threshold pairs keep every row since the bound dominates their
+    # true intersection).  Measured at sf0.1: prunes 0.3% of join rows
+    # (candidate pairs here are overwhelmingly TRUE near-dup pairs,
+    # which positional bounds cannot prune) while the array_sort+
+    # posexplode index build costs ~10% CPU — net loss 0.83→0.87 s
+    # wall, 7.5→8.3 CPU-s.
+    flat = (_shingle_sets(df, id_col, text_col, k)
+            .select("id", F.size("shset").alias("n"),
+                    F.explode("shset").alias("sh"))
+            .select("id", "n", F.xxhash64("sh").alias("h")))
+    if df_cap:
+        from pyspark.sql import Window
+        # feeds the df count(s) and the anti-join: one shingle pass
+        flat = scratch.register(flat.persist())
+        dfs = flat.groupBy("h").count()
+        if df_cap == "auto":
+            # one histogram agg decides from the corpus's own df
+            # distribution; None → the uncapped index
+            df_cap = _auto_cap(dfs)
+        if df_cap:
+            hot = dfs.filter(F.col("count") > df_cap).select("h")
+            flat = (flat.join(hot, "h", "left_anti")
+                    .withColumn("n", F.count(F.lit(1))
+                                .over(Window.partitionBy("id"))))
+    flat = scratch.register(flat.repartition(p, "h").persist())
+    fa, fb = flat.alias("a"), flat.alias("b")
+    pc = (fa.join(fb.hint("shuffle_hash"),
+                  (F.col("a.h") == F.col("b.h")) &
+                  (F.col("a.id") < F.col("b.id")) &
+                  (F.col("b.n") >= F.col("a.n") * t) &
+                  (F.col("a.n") >= F.col("b.n") * t))
+          .groupBy(F.col("a.id").alias("id_a"),
+                   F.col("b.id").alias("id_b"),
+                   F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
+          .agg(F.count(F.lit(1)).alias("inter")))
+    return (pc.withColumn(
+                "jaccard",
+                F.col("inter") / (F.col("na") + F.col("nb")
+                                  - F.col("inter")))
             .filter(F.col("jaccard") >= t)
-            .select("id_a", "id_b", "jaccard").distinct())
+            .select("id_a", "id_b", "jaccard"))
 
 
 def verify_pairs_jaccard(df: DataFrame, cand: DataFrame, id_col: str,
@@ -1314,8 +1219,9 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str = "text",
                                          bits=bits,
                                          hash_family=hash_family),
             val_col="hamming", val_lit=0, star=star_intra)
-    sig = simhash(df, id_col, text_col, bits=bits,
-                  hash_family=hash_family).cache()
+    # both sides of the banded self-join read the signatures
+    sig = scratch.register(simhash(df, id_col, text_col, bits=bits,
+                                   hash_family=hash_family).persist())
     width = -(-bits // 4)  # ceil: 16 for 64-bit, 8 for the 31-bit family
     mask = (1 << width) - 1
     banded = sig.select(
@@ -1926,24 +1832,38 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
                .union(mins.select(F.col("u"), F.col("m").alias("v"))))
         return out.filter(F.col("u") != F.col("v")).distinct()
 
+    def drop(df: DataFrame) -> None:
+        # a local checkpoint's blocks belong to the RDD under its
+        # LogicalRDD, which DataFrame.unpersist does not reach
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
     cur = edges.persist()
     prev_sig = None
-    for _ in range(max_iter):
-        # lazy checkpoint: the signature agg below materializes it, so
-        # each round is ONE job (eager would run a second, separate job)
-        nxt = small_star(large_star(cur)).localCheckpoint(eager=False)
-        sig = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h")
-        ).collect()[0]
-        cur.unpersist()
-        cur = nxt
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds")
+    try:
+        for _ in range(max_iter):
+            # lazy checkpoint: the signature agg below materializes it,
+            # so each round is ONE job (eager would run a second job)
+            nxt = small_star(large_star(cur)).localCheckpoint(eager=False)
+            sig = nxt.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.bit_xor(F.xxhash64("u", "v")),
+                           F.lit(0)).alias("h")
+            ).collect()[0]
+            drop(cur)
+            cur = nxt
+            if prev_sig == (sig["n"], sig["h"]):
+                break
+            prev_sig = (sig["n"], sig["h"])
+        else:
+            raise RuntimeError(f"connected_components did not converge "
+                               f"in {max_iter} rounds")
+    except BaseException:
+        drop(cur)
+        members.unpersist()
+        raise
 
     # At the fixpoint the edges form stars (node -> component min); centers
     # (the minima) appear only on the right, so default them to themselves.

@@ -22,8 +22,8 @@ New-batch dedup is then:
     banded index: new×index bucket matches only — no new×new and,
     critically, no index×index self-join, so cost is O(batch + matched
     buckets) per ingest, independent of corpus size.  The batch side is
-    broadcast when small (plan-statistics estimate, same rule as
-    ``ngram_jaccard_pairs``), so the 100-TB index is never shuffled.
+    broadcast when small (plan-statistics size estimate ×8), so the
+    100-TB index is never shuffled.
 
 Storage layout: persist each index hash-bucketed on its join key with
 ``save_index_bucketed`` (exact/substring → fp, minhash → the pre-banded
@@ -407,8 +407,8 @@ def minhash_against(new_df: DataFrame, index: DataFrame, id_col: str,
     Only new×index bucket matches are generated (no new×new — run
     ``minhash_lsh_pairs`` on the batch alone for intra-batch pairs —
     and no index×index).  ``broadcast_new=None`` auto-broadcasts the
-    banded batch when its plan-statistics size estimate (×8 expansion,
-    same rule as ngram_jaccard_pairs) fits under the threshold, so the
+    banded batch when its plan-statistics size estimate (×8 expansion
+    for compressed-on-disk bytes) fits under the threshold, so the
     corpus-sized index side is joined in place rather than shuffled.
     For batches past the broadcast bound, persist the PRE-BANDED index
     (``minhash_index_banded`` + ``save_index_bucketed(kind="minhash")``)

@@ -671,6 +671,26 @@ def test_split_leakage_brute_force(spark):
     assert out[4]["n_grams"] == 0 and out[4]["contamination"] == 0.0
 
 
+def test_split_leakage_auto_resamples_after_explicit_tier(spark):
+    """An explicit-tier call memoizes the split counts without the
+    eval-volume sample; a later prune="auto" call on the same frame
+    must still size its tier from the true eval char volume, i.e. leave
+    the same memo entry a fresh auto call does."""
+    rows = [(i, "train" if i % 4 else "eval",
+             " ".join(f"w{(i * 7 + j) % 50}" for j in range(30)))
+            for i in range(40)]
+    df = spark.createDataFrame(rows, ["doc_id", "split", "text"])
+    key = (df.semanticHash(), "split", "train", "text")
+    CU._SPLIT_SIZE_MEMO.pop(key, None)
+    CU.split_leakage(df, n=5, prune="auto").collect()
+    fresh = CU._SPLIT_SIZE_MEMO[key]
+    assert fresh[2] > 0
+    CU._SPLIT_SIZE_MEMO.pop(key)
+    CU.split_leakage(df, n=5, prune="broadcast").collect()
+    CU.split_leakage(df, n=5, prune="auto").collect()
+    assert CU._SPLIT_SIZE_MEMO[key] == fresh
+
+
 def test_split_leakage_prune_modes_identical(spark, tables):
     """The eval-gram prune (broadcast or bloom) must be result-neutral
     vs the unpruned two-sided shuffle — pruned-away train grams can
@@ -1023,11 +1043,36 @@ def test_paragraph_counts_match_explode_on_edges(spark):
         assert got == want, (gran, got, want)
 
 
-def test_jaccard_count_vs_arrays_verify_differential(spark):
-    """r9: verify="count" (inverted-index count aggregation) must be
-    row- and value-identical to verify="arrays" (prefix join +
-    array_intersect verify) on a corpus with near-dups, exact dups,
-    disjoint docs, and shingle-free docs — at two thresholds."""
+def _jaccard_reference(spark, df, t, df_cap=None):
+    """Brute-force exact Jaccard: collect the shingle sets, drop
+    shingles held by more than `df_cap` docs ("auto" sizes the cap with
+    the operator's own policy from the driver-side df counts), then
+    score every pair of docs on the driver."""
+    from collections import Counter
+    from itertools import combinations
+    from juliadb_jl_spark.functions import dedup as DD
+    sets = {r["id"]: set(r["shset"])
+            for r in DD._shingle_sets(df, "doc_id", "text", 3).collect()}
+    dfc = Counter(s for v in sets.values() for s in v)
+    if df_cap == "auto":
+        df_cap = DD._auto_cap(spark.createDataFrame(
+            [(c,) for c in dfc.values()], "count long"))
+    if df_cap:
+        sets = {i: {s for s in v if dfc[s] <= df_cap}
+                for i, v in sets.items()}
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        if inter and inter / len(sets[a] | sets[b]) >= t:
+            out[(a, b)] = inter / len(sets[a] | sets[b])
+    return out
+
+
+def test_jaccard_matches_brute_force(spark):
+    """The inverted-index count join must return exactly the pairs (and
+    values) of a driver-side all-pairs set Jaccard, on a corpus with
+    near-dups, exact dups, disjoint docs and shingle-free docs — at
+    three thresholds, and under an explicit and an auto df cap."""
     from juliadb_jl_spark.functions import dedup as DD
     import random
     rng = random.Random(11)
@@ -1039,32 +1084,21 @@ def test_jaccard_count_vs_arrays_verify_differential(spark):
     rows += [(100, rows[0][1]), (101, rows[0][1] + " extra tail words"),
              (102, "xq yq zq unique island doc"), (103, "shrt")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    import pandas as pd
     # t=0.9 stresses the boundary where a count undercount would flip a
-    # pair below threshold (added in r10 while evaluating a positional
-    # filter that was ultimately REJECTED — the coverage stays: any
-    # future row-pruning idea on the count path must survive it)
-    for t in (0.2, 0.5, 0.9):
-        cnt = DD.ngram_jaccard_pairs(df, "doc_id", k=3, threshold=t,
-                                     unique_lift=False,
-                                     verify="count").toPandas()
-        arr = DD.ngram_jaccard_pairs(df, "doc_id", k=3, threshold=t,
-                                     unique_lift=False,
-                                     verify="arrays").toPandas()
-        key = ["id_a", "id_b"]
-        cnt = cnt.sort_values(key, ignore_index=True)
-        arr = arr.sort_values(key, ignore_index=True)
-        assert len(cnt) > 0
-        pd.testing.assert_frame_equal(cnt, arr)
-    # df_cap routes the count path through the hashed-array ("hs")
-    # index branch — differential coverage for the capped shape
-    cnt = DD.ngram_jaccard_pairs(df, "doc_id", k=3, threshold=0.5,
-                                 unique_lift=False, df_cap=50,
-                                 verify="count").toPandas()
-    arr = DD.ngram_jaccard_pairs(df, "doc_id", k=3, threshold=0.5,
-                                 unique_lift=False, df_cap=50,
-                                 verify="arrays").toPandas()
-    cnt = cnt.sort_values(key, ignore_index=True)
-    arr = arr.sort_values(key, ignore_index=True)
-    assert len(cnt) > 0
-    pd.testing.assert_frame_equal(cnt, arr)
+    # pair below threshold
+    cases = [(0.2, None), (0.5, None), (0.9, None),
+             (0.5, 50), (0.5, 2), (0.5, "auto")]
+    seen = {}
+    for t, cap in cases:
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+               DD.ngram_jaccard_pairs(df, "doc_id", k=3, threshold=t,
+                                      df_cap=cap).collect()}
+        want = seen[t, cap] = _jaccard_reference(spark, df, t, cap)
+        assert got.keys() == want.keys(), (t, cap)
+        for key, v in want.items():
+            assert got[key] == pytest.approx(v, rel=1e-12), (t, cap, key)
+    assert all(seen[t, None] for t in (0.2, 0.5, 0.9))
+    # df_cap=50 drops nothing on 64 docs; df_cap=2 really drops shingles
+    # (doc 0's text is held by docs 0, 100 and 101) and loses its pairs
+    assert seen[0.5, 50] == seen[0.5, None]
+    assert len(seen[0.5, 2]) < len(seen[0.5, None])

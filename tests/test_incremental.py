@@ -777,12 +777,17 @@ def test_dedup_exact_cosourced_matches_two_operator_path(spark):
         == [False, True]
 
 
-def test_dedup_exact_cosourced_single_scan_plan(spark):
+def test_dedup_exact_cosourced_single_scan_plan(spark, monkeypatch):
     """keys_only=True: plan scans the source ONCE, no join (the generic
     two-operator path scans it twice) — the shape the q9b optimization
     claims. keys_only=False adds the row-recovery semi-join (2 scans,
     still one fewer than the generic pair's 3-subtree shape), as the
     docstring qualifies."""
+    from juliadb_jl_spark.sources import testdata
+    # the scan counts below assume a plain parquet read: no cached
+    # in-memory copy from SPARK_GRAFT_CACHE_INPUT or an earlier read
+    monkeypatch.delenv("SPARK_GRAFT_CACHE_INPUT", raising=False)
+    monkeypatch.setattr(testdata, "_CACHE", {})
     docs = read_table(spark, SF_DIR, "documents")
     even, odd = F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1
     fused = INC.dedup_exact_cosourced(docs, "doc_id", even, odd,

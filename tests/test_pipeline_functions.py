@@ -91,6 +91,28 @@ def test_simhash_pairs(tables):
     assert (pairs["hamming"] <= 16).all()
 
 
+def _persisted_rdd_ids(spark):
+    """Ids of the RDDs the session holds persisted right now (ids, not
+    a count, so a concurrent cleanup of an older RDD cannot mask a
+    new leak)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_simhash_pairs_releases_signature_persist(spark):
+    """The banded self-join's persisted signature frame is registered
+    as scratch: after the consuming action and release_scratch() the
+    session holds no RDD it did not hold before the call."""
+    from juliadb_jl_spark.functions.scratch import release_scratch
+    df = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i % 3}") for i in range(20)],
+        "doc_id long, text string")
+    release_scratch()
+    before = _persisted_rdd_ids(spark)
+    assert DD.simhash_pairs(df, "doc_id", unique_lift=False).count() > 0
+    release_scratch()
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
 def test_cosine_topk_vs_numpy(tables):
     emb = tables["embeddings"].df
     queries = emb.filter(F.col("vec_id") < 3)
@@ -586,6 +608,18 @@ def test_connected_components_random(spark):
     got = {r["node"]: r["component"]
            for r in connected_components(df).collect()}
     assert got == want
+
+
+def test_connected_components_nonconvergence_releases_persists(spark):
+    """A chain needs several rounds; max_iter=1 must raise — and the
+    failure path must release the member set and the round's edges."""
+    from juliadb_jl_spark.functions.dedup import connected_components
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(12)],
+                                  "id_a long, id_b long")
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iter=1)
+    assert _persisted_rdd_ids(spark) - before == set()
 
 
 def test_dedup_by_clusters_transitive(spark):

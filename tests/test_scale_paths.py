@@ -150,32 +150,6 @@ def test_salted_join_rejects_right_preserving():
         salted_join(None, None, on="k", how="outer")
 
 
-def test_jaccard_nonbroadcast_path_same_result(tables):
-    # size-aware auto (VERDICT r1 #3): past the threshold the verify joins
-    # must run shuffled (no broadcast of the shingle side) with identical
-    # results
-    from juliadb_jl_spark.functions.dedup import ngram_jaccard_pairs
-    docs = tables["documents"].df
-    # broadcast_verify configures the verify="arrays" path (the r9
-    # default verify="count" has no verify join at all)
-    auto = ngram_jaccard_pairs(docs, "doc_id", k=3, threshold=0.5,
-                               verify="arrays")
-    shuffled = ngram_jaccard_pairs(docs, "doc_id", k=3, threshold=0.5,
-                                   broadcast_threshold_bytes=0,
-                                   verify="arrays")
-    a, b = _norm(auto.toPandas()), _norm(shuffled.toPandas())
-    pd.testing.assert_frame_equal(a, b)
-    # assert the STATIC choice: no broadcast hint planted on the verify
-    # sides (AQE may still broadcast at toy scale — that's runtime
-    # re-planning and exactly what we want; at 100 TB the sides exceed the
-    # AQE threshold and the plan stays shuffled)
-    logical = shuffled._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical
-    forced = ngram_jaccard_pairs(docs, "doc_id", k=3, threshold=0.5,
-                                 broadcast_verify=True, verify="arrays")
-    assert "broadcast" in forced._jdf.queryExecution().analyzed().toString()
-
-
 def test_bloom_semi_join_exact_and_pruning(tables):
     # exact=True must equal a plain left_semi join (false positives
     # removed); the Bloom pre-filter itself must prune non-matching rows
