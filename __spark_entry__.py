@@ -3056,8 +3056,8 @@ sc AS (SELECT d.doc_id,
 
 def _dsir_fit_score(spark, sf_dir):
     # one-pass variant: target is a predicate over the corpus, so fit +
-    # score share a single explode (dsir_fit_and_score ≡ the generic
-    # dsir_logratios → dsir_scores path, differential-tested)
+    # score share a single histogram pass (dsir_fit_and_score ≡ the
+    # generic dsir_logratios → dsir_scores path, differential-tested)
     d = read_table(spark, sf_dir, "documents")
     return DS.dsir_fit_and_score(d, "doc_id", F.col("lang") == "en",
                                  n_buckets=_DSIR_NB, seed=1,
@@ -3072,8 +3072,10 @@ def q9h(spark, sf_dir):
     """DSIR importance scores: hashed unigram+bigram bucket features
     (B=256, portable family), add-1-smoothed target (lang='en') and raw
     bucket distributions, per-doc log importance weight. Scale shape:
-    one corpus explode; both distributions are B-sized broadcasts; the
-    corpus crosses one shuffle (the per-doc aggregation). The fitted
+    one fused Arrow pass emits per-doc bucket histograms (no gram
+    strings, no per-gram rows); both distributions are B-sized
+    broadcasts; the corpus crosses one shuffle (the per-doc
+    aggregation). The fitted
     log-ratio table is reusable across ingest batches (append-stable
     scores)."""
     return _dsir_fit_score(spark, sf_dir)
