@@ -3935,14 +3935,15 @@ GROUP BY d.doc_id, d.split
 def qa4(spark, sf_dir):
     """Train→eval leakage report (curation.split_leakage): fraction of
     each eval doc's distinct word 5-grams that also occur in the train
-    split — run before publishing a split. prune='auto' (default)
-    sizes the eval gram set with a capped collect and runs the FUSED
-    tier here: train grams are set-tested inside the Arrow pass before
-    emission, so only eval-matching grams ever cross the Arrow
-    boundary and the train side crosses zero exchange; when the eval
-    set outgrows the cap (corpus-vs-corpus), it falls back to the
-    two-sided gram-keyed shuffle with a sort-merge bench join —
-    differential-tested identical (incl. on adversarial whitespace)."""
+    split — run before publishing a split. The eval split's measured
+    char volume picks the tier; at the contract scales it is the FUSED
+    tier: train gram keys are set-tested inside the Arrow pass before
+    emission, so only eval-matching keys ever cross the Arrow boundary
+    and the train side crosses zero exchange. A larger eval split runs
+    the hashed-key broadcast tier, then the two-sided hashed-key
+    shuffle with a sort-merge bench join (also the fused tier's
+    overflow fallback) — all differential-tested identical (incl. on
+    adversarial whitespace)."""
     d = read_table(spark, sf_dir, "documents")
     s = SP.split_by_hash(d, "doc_id", {"train": 0.9, "eval": 0.1},
                          seed=11)

@@ -230,7 +230,9 @@ def main():
             "queries_min": {k: v.get("min") for k, v in agg.items()},
             "queries_cpu": {k: v.get("cpu") for k, v in agg.items()
                             if v.get("cpu") is not None},
-            "isolated": True, "runs": runs, "scratch_released": True,
+            "isolated": True, "runs": runs,
+            "scratch_released": sum(v.get("scratch_released", 0)
+                                    for v in agg.values()),
             "sf": os.path.basename(sf_dir.rstrip("/")).replace("sf", ""),
             # same no-invisible-override stamps as the main artifact
             # (VERDICT r9 #5)
@@ -268,7 +270,18 @@ def main():
 
     me = os.getpid()
 
-    from juliadb_jl_spark.functions import scratch
+    import juliadb_jl_spark as jdb
+    from juliadb_jl_spark.functions import curation, scratch
+
+    released = [0]      # summed release_scratch() counts, all runs
+
+    def _reset():
+        # outside the timed region: drop persisted intermediates and the
+        # size-hint memos, so no run is served by an earlier run's
+        # blocks or sizing jobs
+        released[0] += scratch.release_scratch(blocking=True)
+        jdb.clear_dup_stats()
+        curation._SPLIT_SIZE_MEMO.clear()
 
     def run_once(fn) -> tuple[float, float | None]:
         c0 = _proc_tree_cpu(me)
@@ -280,7 +293,7 @@ def main():
             # intermediates to the NEXT query's runs (review finding:
             # without this, a failed q36's shingle frame could be
             # cache-served to qb0's warm-up)
-            scratch.release_scratch(blocking=True)
+            _reset()
             raise
         wall = time.time() - t0
         c1 = _proc_tree_cpu(me)
@@ -301,8 +314,9 @@ def main():
         # sources/testdata._CACHE and is deliberately NOT touched.
         # Affected rows' seconds RISE vs BENCH_r09 by construction —
         # see OPTIMIZATION_r10.md ("Bench protocol fix") for the
-        # old-vs-new table.
-        scratch.release_scratch(blocking=True)
+        # old-vs-new table.  The size-hint memos are cleared here too,
+        # so every run pays its own sizing jobs.
+        _reset()
         return wall, cpu
 
     if only is not None:
@@ -316,6 +330,7 @@ def main():
             "median": round(statistics.median(times), 4),
             "min": round(min(times), 4),
             "cpu": round(statistics.median(cpu_ts), 4) if cpu_ts else None,
+            "scratch_released": released[0],
         }))
         return
 
@@ -379,8 +394,9 @@ def main():
         # r10 protocol fix self-description: per-run scratch release
         # (see run_once) — rows that persist intermediates are NOT
         # comparable to pre-r10 artifacts, which served runs 2..n from
-        # run 1's cache blocks (q35/q36/qb0/q9h).
-        "scratch_released": True,
+        # run 1's cache blocks (q35/q36/qb0/q9h).  The count of
+        # intermediates released over every run.
+        "scratch_released": released[0],
     }
     if rung:
         full["rung"] = rung
@@ -413,7 +429,7 @@ def main():
         "sf": sf_val,
         "extra_conf": full["extra_conf"],
         "cpus": cpus,
-        "scratch_released": True,
+        "scratch_released": released[0],
         "full_report": full_path,
     }
     if rung:

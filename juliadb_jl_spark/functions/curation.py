@@ -837,11 +837,17 @@ def apply_funnel(df: DataFrame,
 
 
 # split-size hint cache for split_leakage: plan semanticHash →
-# (n_eval, n_train, eval_chars); eval_chars is None until a
-# prune="auto" call has sampled it. Perf-only (drives spread and tier
+# (n_eval, n_train, eval_chars). Perf-only (drives spread and tier
 # decisions); stale entries cannot change output — same contract and
 # caveats as dedup._DUP_STATS_MEMO (call-site note there).
-_SPLIT_SIZE_MEMO: dict[tuple, tuple[int, int, int | None]] = {}
+_SPLIT_SIZE_MEMO: dict[tuple, tuple[int, int, int]] = {}
+
+# split_leakage's measured tier boundaries on the estimated eval char
+# volume (SCALING.md "split_leakage: one ladder"), and the fused tier's
+# cap on collected eval-gram rows, past which it falls back to shuffle.
+_FUSED_MAX_CHARS = 512 * 1024
+_BROADCAST_MAX_CHARS = 32 * 1024 * 1024
+_FUSED_MAX_EVAL_GRAMS = 1 << 20
 
 
 def _doc_gram_offsets(ts: list, n: int):
@@ -859,422 +865,247 @@ def _doc_gram_offsets(ts: list, n: int):
 
 def split_leakage(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", split_col: str = "split",
-                  train: str = "train", n: int = 5,
-                  prune: str | None = "auto",
-                  max_eval_grams: int = 1 << 20,
-                  bloom_bits: int = 1 << 26) -> DataFrame:
+                  train: str = "train", n: int = 5) -> DataFrame:
     """Train→eval leakage report for an already-split corpus: for every
     NON-train document, the fraction of its distinct word n-grams that
     also occur in the train split (the within-release version of
     benchmark decontamination — run it before publishing a split).
 
-    Returns (id_col, split_col, n_grams, n_hits, contamination).
+    Returns (id_col, split_col, n_grams, n_hits, contamination), one row
+    per (id, split); a repeated (id, split) sums its rows' counts.
 
-    Scale (100 TB): the train side is corpus-sized, but only train
-    grams that ALSO occur in the eval split can ever score a hit — so
-    the train gram stream must be pruned against the (much smaller)
-    eval gram set BEFORE any train-side exchange. Prune modes:
+    Scale (100 TB): only train grams that ALSO occur in the eval split
+    can score, so whenever the eval gram set is small enough to ship,
+    the corpus-sized train gram stream is pruned against it before any
+    train-side exchange. Every tier scores on a 128-bit hashed gram key
+    (two 64-bit lanes; gram text never crosses an exchange or a driver
+    collect). The tier follows the eval split's char volume, estimated
+    as n_eval × a 2000-doc length sample and memoized with the counts:
 
-    - ``"fused"``: the prune reaches the gram BUILD itself — TWO jobs
-      total. Job 1 streams the eval split once, emitting each doc's
-      distinct grams (per-doc dedup in the Arrow pass, no explode, no
-      exchange); the driver keeps the per-doc lists and their union
-      S_e. Job 2 streams the train split once: each train gram is
-      built and set-tested against the task-broadcast S_e BEFORE
-      emitting, so only matching grams (⊆ S_e, task-deduped) ever
-      cross the Arrow boundary — the train side does zero array
-      materialization, zero explode, zero exchange. Scoring is then a
-      driver-local set intersection per eval doc (the per-doc lists
-      are already in hand). Exact — set membership has no false
-      positives. Requires the eval gram occurrence lists to fit on
-      the driver.
-    - ``"auto"`` (default): a measured three-tier ladder keyed on the
-      eval split's char volume (estimated as n_eval × a 2000-doc
-      length sample — an early-stopping scan, memoized with the split
-      counts, so the sizing never reads the full text): ≤ ~512 KB →
-      "fused" (job-floor regime — the driver round-trips beat extra
-      Spark jobs; sf0.1 A/B: fused 1.6 s vs broadcast 2.3 s); ≤ 32 MB
-      → "broadcast" (JVM-parallel regime — at the 50k-doc rung
-      broadcast 1.8 s vs fused 4.0 s: per-doc Python set work and two
-      driver collects lose to JVM semi-joins once eval grams reach
-      ~10^5); else the scale-safe ``None`` shuffle (an eval split too
-      big to broadcast is corpus-vs-corpus). The fused tier keeps its
-      per-task cap; on overflow it falls back to ``None`` — nothing
-      unbounded is ever collected or broadcast by default. (bloom
-      measured slower than the shuffle on a high-leak corpus — its
-      bitmap prunes nothing there — so auto never picks it; it stays
-      the manual choice for low-leak, huge-eval decontamination.)
-    - ``"broadcast"``: JVM broadcast semi-join of the train gram
-      stream against the eval distinct-gram set (grams still built for
-      every train doc — the fused path exists because this build was
-      the measured cost at corpus scale).
-    - ``"bloom"``: the eval gram set compressed to a `bloom_bits`-bit
-      bitmap (8 MiB at the default 2^26) when it exceeds broadcast
-      limits — Bloom false positives only admit extra REAL train grams
-      that then match no eval gram, so the result is identical. The
-      pruned bench set is NOT force-broadcast (it can be near
-      eval-sized); AQE sizes that join at runtime.
-    - ``None``: both sides hash-partition on the gram key — the
-      corpus-vs-corpus shape where neither set nor bitmap-miss-rate is
-      small. Since r8 this tier scores on a 128-bit hashed gram key
-      (two seeded xxhash64 lanes): gram TEXT never crosses the
-      exchange — 16 fixed bytes per gram shuffle and sort instead of
-      n-word strings. Result-neutral up to a 2^-128-scale collision;
-      differential-pinned to the string-keyed modes."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    - ≤ 512 KB, fused: job 1 streams the eval split and collects each
+      row's distinct gram keys; job 2 streams the train split and tests
+      every train gram key against the task-broadcast eval key set
+      before emitting, so only matching keys cross the Arrow boundary.
+      Scoring is driver-local. The collect is capped; on overflow the
+      call falls back to the shuffle tier.
+    - ≤ 32 MB, broadcast: train keys are left-semi joined against the
+      broadcast distinct eval keys; the pruned bench is broadcast too.
+    - larger, shuffle: corpus-vs-corpus — both sides hash-partition on
+      the key and the bench join is pinned to sort-merge.
 
-    from juliadb_jl_spark.functions.text import tokens
+    The tiers agree up to a 2⁻¹²⁸-scale key collision on natural text
+    (non-cryptographic lanes); differential tests pin them together."""
+    return _split_leakage(df, id_col, text_col, split_col, train, n)
+
+
+def _split_leakage(df: DataFrame, id_col: str, text_col: str,
+                   split_col: str, train: str, n: int,
+                   tier: str | None = None) -> DataFrame:
+    """`split_leakage` with `tier` ("fused", "broadcast" or "shuffle")
+    forced in place of the size-picked one — how tests reach every tier
+    on small data. Sizing, memo and overflow fallback are unchanged."""
     is_train = F.col(split_col) == train
-    # ONE column-pruned counting pass (split_col only — the text column
-    # chunks are never read) sizes both sides exactly, replacing both
-    # the old gate-estimate job and any blind repartition: each side is
-    # spread only when its row count says the per-doc Python work
-    # outweighs an exchange, and to only as many partitions as the work
-    # fills. Filters sit BELOW the spread, so a job exchanges at most
-    # its own split's text, never the whole corpus. Counts are memoized
-    # on the plan's semantic hash (the dedup._DUP_STATS_MEMO pattern:
-    # performance-only hints, a stale hit cannot change output).
+    # Sizing: ONE counting pass column-pruned to split_col plus an
+    # early-stopping 2000-row length sample, so neither job reads the
+    # full text at corpus scale. Memoized on the plan's semantic hash
+    # (the dedup._DUP_STATS_MEMO pattern: a stale hit cannot change
+    # output). The counts also size each side's spread below.
     memo_key = None
     try:
         memo_key = (df.semanticHash(), split_col, train, text_col)
     except Exception:
         pass
-    hit = _SPLIT_SIZE_MEMO.get(memo_key) if memo_key is not None else None
-    if hit is not None:
-        n_ev, n_tr, ev_chars = hit
-    else:
+    sizes = _SPLIT_SIZE_MEMO.get(memo_key) if memo_key else None
+    if sizes is None:
         cnt = {r["__t"]: r["count"] for r in
                df.groupBy(is_train.alias("__t")).count().collect()}
         n_ev, n_tr = cnt.get(False, 0), cnt.get(True, 0)
-        ev_chars = None
-    if ev_chars is None and prune == "auto":
-        # eval char volume ESTIMATE for the auto tier ladder: a
-        # 2000-doc limit sample (early-stopping scan — the counting
-        # job above stays column-pruned to split_col, so neither
-        # sizing job reads the full text at corpus scale). Taken on a
-        # memo hit too when an explicit-tier call stored the counts
-        # without it.
-        ev_chars = 0
-        if n_ev > 0:
-            samp = (df.filter(~is_train)
-                    .select(F.length(F.coalesce(F.col(text_col),
-                                                F.lit("")))
-                            .alias("__l"))
-                    .limit(2000).agg(F.avg("__l")).first()[0]) or 0
-            ev_chars = int(samp * n_ev)
-    if memo_key is not None and hit != (n_ev, n_tr, ev_chars):
-        if len(_SPLIT_SIZE_MEMO) > 256:
-            _SPLIT_SIZE_MEMO.clear()
-        _SPLIT_SIZE_MEMO[memo_key] = (n_ev, n_tr, ev_chars)
+        samp = (df.filter(~is_train)
+                .select(F.length(F.coalesce(F.col(text_col), F.lit("")))
+                        .alias("__l"))
+                .limit(2000).agg(F.avg("__l")).first()[0]) if n_ev else 0
+        sizes = (n_ev, n_tr, int((samp or 0) * n_ev))
+        if memo_key is not None:
+            if len(_SPLIT_SIZE_MEMO) > 256:
+                _SPLIT_SIZE_MEMO.clear()
+            _SPLIT_SIZE_MEMO[memo_key] = sizes
+    n_ev, n_tr, ev_chars = sizes
+    if tier is None:
+        tier = ("fused" if ev_chars <= _FUSED_MAX_CHARS else
+                "broadcast" if ev_chars <= _BROADCAST_MAX_CHARS else
+                "shuffle")
     par = df.sparkSession.sparkContext.defaultParallelism
 
-    if prune == "auto":
-        # measured tier boundaries — see the docstring ladder
-        if ev_chars > 32 * 1024 * 1024:
-            prune = None
-        elif ev_chars > 512 * 1024:
-            prune = "broadcast"
-        # else stay "auto": the fused tier below keeps its cap guard
-
     # Per-task doc budget: ~300 µs/doc of string-built Python gram work
-    # on the broadcast/bloom/shuffle tiers (→ 4000 docs ≈ 1.2 s, well
-    # above the exchange+stage overhead an extra task buys back); the
-    # fused tier's lane-vectorized pass measured ~120 µs/doc (r10), so
-    # a fused side tolerates 2.5× more docs before an exchange pays —
-    # and a single-task train side also skips the distinct exchange
-    # below (its per-task dedup IS global), saving a whole stage.
-    per_task = 10_000 if prune in ("auto", "fused") else 4_000
-
-    def _nparts(rows):
-        # a side that fits one task skips its exchange entirely
+    # (→ 4000 docs ≈ 1.2 s, well above the exchange+stage overhead an
+    # extra task buys back); the fused tier's lane-vectorized pass
+    # measured ~120 µs/doc (r10), so it tolerates 10k. A side that fits
+    # one task skips its exchange; filters sit BELOW the spread, so a
+    # job exchanges only its own split's text.
+    def _nparts(rows, per_task):
         return 1 if rows <= per_task else min(par, -(-rows // per_task))
 
-    def _side(flt, rows):
-        side = df.filter(flt)
-        p = _nparts(rows)
-        # p == 1: stage overhead > serial Python work — skip the exchange
-        return side if p == 1 else side.repartition(p)
+    def _side(flt, rows, per_task):
+        p = _nparts(rows, per_task)
+        return df.filter(flt) if p == 1 else df.filter(flt).repartition(p)
 
-    ev = _side(~is_train, n_ev)
-    tr = _side(is_train, n_tr)
-
-    if prune in ("auto", "fused"):
-        import numpy as np
-        from pyspark.sql import types as T
-
-        from juliadb_jl_spark.functions.text import (_doc_unique_pairs,
-                                                     _gram_lanes_flat)
-        sc = df.sparkSession.sparkContext
-        # Per-task cap: "auto" bounds every task's emitted rows — and so
-        # the worst-case transient driver collect on the overflow path
-        # (≤ n_parts × cap) — then falls back to the scale-safe shuffle
-        # shape; explicit "fused" trusts the caller. A skew-induced
-        # false overflow only costs the fused fast path, never
-        # correctness.
-        cap = (max(max_eval_grams // _nparts(n_ev), 50_000)
-               if prune == "auto" else (1 << 62))
-        # r10: both fused jobs ride the 128-bit hashed gram keys of
-        # `_gram_lanes_flat` (the same vectorized lane pass — and the
-        # same 2⁻¹²⁸ exactness class — the shuffle tier has scored on
-        # since r8): no gram STRING is ever built, per-doc dedup is a
-        # bytes-view np.unique, and the per-gram Python loop that
-        # dominated the train side (~1 µs × every train gram) becomes
-        # numpy.  The long columns carry NO nulls — a nullable int64
-        # degrades to float64 in toPandas and would corrupt hashes
-        # above 2⁵³ — so zero-gram docs ride an __m=0 marker row and
-        # cap overflow an __m=-1 sentinel row instead.
-        out_schema = T.StructType([
-            T.StructField("__id", df.schema[id_col].dataType),
-            T.StructField("__split", df.schema[split_col].dataType),
-            T.StructField("__h1", T.LongType()),
-            T.StructField("__h2", T.LongType()),
-            T.StructField("__m", T.IntegerType())])
-
-        def _eval_doc_grams(it):
-            # Job 1: one row per (eval doc, distinct hashed gram) —
-            # per-doc dedup happens HERE (np.unique over the lane
-            # pairs), so no JVM distinct exchange and no per-doc array
-            # materialization.
-            emitted = 0
-            for pdf in it:
-                h1a, h2a, counts = _gram_lanes_flat(pdf["__toks"], n)
-                ids, sps, g1, g2, ms = [], [], [], [], []
-                for di, sp_, (u1, u2) in zip(
-                        pdf["__id"], pdf["__split"],
-                        _doc_unique_pairs(h1a, h2a, counts)):
-                    m_ = len(u1)
-                    if m_ == 0:
-                        ids.append(di)
-                        sps.append(sp_)
-                        g1.append(0)
-                        g2.append(0)
-                        ms.append(0)
-                        continue
-                    emitted += m_
-                    if emitted > cap:
-                        yield pd.DataFrame(
-                            {"__id": [di], "__split": [sp_],
-                             "__h1": [0], "__h2": [0], "__m": [-1]})
-                        return
-                    ids.extend([di] * m_)
-                    sps.extend([sp_] * m_)
-                    g1.extend(u1.view(np.int64).tolist())
-                    g2.extend(u2.view(np.int64).tolist())
-                    ms.extend([1] * m_)
-                yield pd.DataFrame({"__id": ids, "__split": sps,
-                                    "__h1": g1, "__h2": g2, "__m": ms})
-
-        ev_toks = ev.select(F.col(id_col).alias("__id"),
-                            F.col(split_col).alias("__split"),
-                            tokens(F.col(text_col)).alias("__toks"))
-        ev_pdf = ev_toks.mapInPandas(_eval_doc_grams,
-                                     out_schema).toPandas()
-        overflow = ((ev_pdf["__m"] == -1).any()
-                    or len(ev_pdf) > max_eval_grams)
-        if prune == "auto" and overflow:
-            prune = None            # scale-safe shuffle shape below
-            # the sides were spread with the fused tier's 10k-docs/task
-            # lane budget; the shuffle tier's string-gram build is
-            # ~2.5× the per-doc work, so rebuild them on its 4k budget
-            # (r10 review finding — the overflow corpora are exactly
-            # the ones big enough for the difference to matter)
-            per_task = 4_000
-            ev = _side(~is_train, n_ev)
-            tr = _side(is_train, n_tr)
-        else:
-            prune = "fused"
-
-    if prune == "fused":
-        docs: dict = {}
-        se: set = set()
-        for di, sp_, a1, a2, m_ in zip(ev_pdf["__id"], ev_pdf["__split"],
-                                       ev_pdf["__h1"], ev_pdf["__h2"],
-                                       ev_pdf["__m"]):
-            rec = docs.get(di)
-            if rec is None:
-                rec = docs[di] = (sp_, set())
-            if m_ > 0:
-                key = (int(a1), int(a2))
-                rec[1].add(key)
-                se.add(key)
-        bc_se = sc.broadcast((np.sort(np.fromiter(
-            (k[0] for k in se), dtype=np.int64, count=len(se))),
-            frozenset(se)))
-
-        def _matched(it):
-            # Job 2: every train gram is lane-hashed vectorized and
-            # S_e-tested BEFORE emission — np.isin on the h1 lane does
-            # the coarse cut, the exact (h1, h2) pair set confirms, so
-            # only candidate keys (task-deduped, ⊆ S_e) ever cross the
-            # Arrow boundary.
-            s1_cand, pair_set = bc_se.value
-            emitted: set = set()
-            for pdf in it:
-                h1a, h2a, _ = _gram_lanes_flat(pdf["__toks"], n)
-                if not len(h1a):
-                    continue
-                s1 = h1a.view(np.int64)
-                s2 = h2a.view(np.int64)
-                o1, o2 = [], []
-                for i in np.nonzero(np.isin(s1, s1_cand))[0]:
-                    key = (int(s1[i]), int(s2[i]))
-                    if key in pair_set and key not in emitted:
-                        emitted.add(key)
-                        o1.append(key[0])
-                        o2.append(key[1])
-                if o1:
-                    yield pd.DataFrame(
-                        {"__h1": np.array(o1, dtype=np.int64),
-                         "__h2": np.array(o2, dtype=np.int64)})
-
-        m = tr.select(tokens(F.col(text_col)).alias("__toks")) \
-            .mapInPandas(_matched, "__h1 long, __h2 long")
-        if _nparts(n_tr) > 1:
-            # multi-task train side: per-task dedup is not global — on
-            # a heavily-leaking corpus every task emits ~|S_e| rows, so
-            # dedup JVM-side before the driver collect (bounds it by
-            # |S_e| whatever the task count). Single-task train sides
-            # skip the exchange: their per-task dedup IS global.
-            m = m.distinct()
-        hits = m.toPandas()
-        h = frozenset(zip((int(x) for x in hits["__h1"]),
-                          (int(x) for x in hits["__h2"])))
-        rows = []
-        for di, (sp_, grams) in docs.items():
-            ng = len(grams)
-            nh = sum(1 for g in grams if g in h)
-            # numpy scalars from pandas → plain Python for createDataFrame
-            di = di.item() if hasattr(di, "item") else di
-            sp_ = sp_.item() if hasattr(sp_, "item") else sp_
-            rows.append((di, sp_, ng, nh,
-                         (nh / ng) if ng > 0 else 0.0))
-        from pyspark.sql import types as T
-        res_schema = T.StructType([
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField(split_col, df.schema[split_col].dataType),
-            T.StructField("n_grams", T.LongType()),
-            T.StructField("n_hits", T.LongType()),
-            T.StructField("contamination", T.DoubleType())])
-        if not rows:
-            return df.sparkSession.createDataFrame([], res_schema)
-        # Arrow-backed local result (r9): a list-of-tuples createDataFrame
-        # executes through a pickled Python RDD — every downstream action
-        # spins up one Python worker per slice just to unpickle a handful
-        # of rows (measured 0.62 s / 8.5 CPU-s per action at sf0.1 vs
-        # 0.16 s / 0.5 CPU-s via pandas+Arrow, which lands as a
-        # JVM-local Arrow relation).
-        res_pdf = pd.DataFrame(
-            rows, columns=[f.name for f in res_schema.fields])
-        return df.sparkSession.createDataFrame(res_pdf, res_schema)
-
-    if prune is None:
-        # Shuffle tier scores on a 128-bit HASHED gram key (two seeded
-        # xxhash64 lanes over the fused-Arrow gram STRINGS): the report
-        # needs per-doc counts, never gram text, so both the train-side
-        # distinct and the two-sided sort-merge join exchange 16 fixed
-        # bytes per gram instead of ~n-word strings. The two seeded
-        # xxhash64 lanes are effectively 128-bit for NATURAL text
-        # (xxhash64 is non-cryptographic, so lane independence across
-        # seeds 1/2 is heuristic, not a provable 2^-128 bound, and an
-        # adversary could engineer cross-lane collisions) — the stated
-        # guarantee is the prune-mode differential test, which pins
-        # this tier's output to the string-keyed broadcast/bloom/fused
-        # paths on every gate run. NULL lanes keep zero-gram eval docs
-        # visible (xxhash64 of NULL would collapse to the seed
-        # constant, not NULL).
-        #
-        # Measured NEGATIVE result (r8, SCALING.md §docs-rung): moving
-        # the lane computation INTO the Arrow pass (text._gram_lanes_
-        # flat + per-doc np.unique, the shape that wins for novelty/
-        # phrases) measured 1825 → 3376 CPU-s / 65 → 116 s wall at the
-        # 5M rung — here BOTH sides need only an explode of the already
-        # -fused arrow_shingles strings plus two JVM codegen hashes,
-        # and the Python-side crc+poly+np.unique work costs more than
-        # the string transfer it avoids (novelty/phrases won because
-        # their pre-shapes also paid JVM array_distinct on long string
-        # arrays and string-keyed recovery joins, which leakage never
-        # had). Kept string-keyed on purpose; do not "unify" without
-        # re-measuring.
-        ev_grams0 = ev.select(
-            F.col(id_col), F.col(split_col),
-            F.explode_outer(
-                F.array_distinct(arrow_shingles(F.col(text_col), n)))
-            .alias("__g"))
-        tg0 = tr.select(
-            F.explode(F.array_distinct(arrow_shingles(F.col(text_col), n)))
-            .alias("__g"))
-        keys = [(1, "__h1"), (2, "__h2")]
-        ev_h = ev_grams0.select(
-            F.col(id_col), F.col(split_col),
-            *[F.when(F.col("__g").isNotNull(),
-                     F.xxhash64("__g", F.lit(s))).alias(a)
-              for s, a in keys])
-        bench = (tg0.select(*[F.xxhash64("__g", F.lit(s)).alias(a)
-                              for s, a in keys])
-                 .distinct().withColumn("__hit", F.lit(1))
-                 .hint("merge"))
-        joined = ev_h.join(bench, ["__h1", "__h2"], "left")
-        n_grams = F.sum(F.col("__h1").isNotNull().cast("long"))
-        n_hits = F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-        return (joined.groupBy(id_col, split_col)
-                .agg(n_grams.alias("n_grams"), n_hits.alias("n_hits"))
-                .withColumn("contamination",
-                            F.when(F.col("n_grams") > 0,
-                                   F.col("n_hits") / F.col("n_grams"))
-                            .otherwise(F.lit(0.0)))
-                .select(id_col, split_col, "n_grams", "n_hits",
-                        "contamination"))
-    ev_grams = ev.select(
-        F.col(id_col), F.col(split_col),
-        F.explode_outer(F.array_distinct(arrow_shingles(F.col(text_col), n)))
-        .alias("__g"))
-    tg = tr.select(
-        F.explode(F.array_distinct(arrow_shingles(F.col(text_col), n)))
-        .alias("__g"))
-    if prune == "broadcast":
-        ev_gset = ev_grams.filter(F.col("__g").isNotNull()) \
-            .select("__g").distinct()
-        tg = tg.join(F.broadcast(ev_gset), "__g", "left_semi")
-    elif prune == "bloom":
-        from juliadb_jl_spark.operators.join import (_bloom_cond,
-                                                     bloom_bitmap)
-        arr = bloom_bitmap(
-            ev_grams.filter(F.col("__g").isNotNull()).select("__g"),
-            "__g", bloom_bits)
-        bf = df.sparkSession.createDataFrame([(arr,)],
-                                             "__bf array<bigint>")
-        tg = (tg.join(F.broadcast(bf))
-              .filter(_bloom_cond("__g", "__bf", bloom_bits, 5))
-              .drop("__bf"))
-    elif prune is not None:
-        raise ValueError(f"prune must be 'auto', 'fused', 'broadcast', "
-                         f"'bloom' or None (got {prune!r})")
-    bench = tg.distinct().withColumn("__hit", F.lit(1))
-    if prune == "broadcast":
-        # pruned bench ⊆ eval gram set, which broadcast-pruned already —
-        # broadcastable by the caller's own choice of this mode. The
-        # bloom path does NOT force-broadcast (its bench can approach
-        # eval-gram-set size); AQE sizes that join at runtime.
-        bench = F.broadcast(bench)
-    else:
-        # Catalyst's static size estimate under a pandas-UDF gram build
-        # is fiction — without a hint the planner broadcast a 6.5 GiB
-        # unpruned train-gram set at the 5M-doc rung (the duplicate_
-        # spans r6 lesson). Pin the sort-merge join; AQE still splits
-        # skewed gram keys at runtime.
-        bench = bench.hint("merge")
-    joined = ev_grams.join(bench, "__g", "left")
-    n_grams = F.sum(F.col("__g").isNotNull().cast("long"))
+    if tier == "fused":
+        out = _fused_leakage(df, id_col, text_col, split_col, n,
+                             _side(~is_train, n_ev, 10_000),
+                             _side(is_train, n_tr, 10_000),
+                             _nparts(n_ev, 10_000), _nparts(n_tr, 10_000))
+        if out is not None:
+            return out
+    # Hashed-key tail (broadcast, shuffle, fused overflow): two seeded
+    # xxhash64 lanes of the fused-Arrow gram strings — 16 fixed bytes per
+    # gram through every join, distinct and exchange. NULL lanes keep
+    # zero-gram eval docs visible (xxhash64 of NULL is the seed
+    # constant). Hashing JVM-side is deliberate: lanes built in the Arrow
+    # pass measured ~1.8× slower here (SCALING.md §docs-rung, r8).
+    ev, tr = _side(~is_train, n_ev, 4_000), _side(is_train, n_tr, 4_000)
+    keys = ["__h1", "__h2"]
+    ev_g = ev.select(F.col(id_col), F.col(split_col), F.explode_outer(
+        F.array_distinct(arrow_shingles(F.col(text_col), n))).alias("__g"))
+    ev_h = ev_g.select(id_col, split_col, *[
+        F.when(F.col("__g").isNotNull(), F.xxhash64("__g", F.lit(s)))
+        .alias(k) for s, k in enumerate(keys, 1)])
+    tr_h = tr.select(F.explode(F.array_distinct(
+        arrow_shingles(F.col(text_col), n))).alias("__g")).select(
+        *[F.xxhash64("__g", F.lit(s)).alias(k)
+          for s, k in enumerate(keys, 1)])
+    if tier == "broadcast":
+        ev_keys = ev_h.filter(F.col("__h1").isNotNull()).select(*keys)
+        tr_h = tr_h.join(F.broadcast(ev_keys.distinct()), keys, "left_semi")
+    bench = tr_h.distinct().withColumn("__hit", F.lit(1))
+    # broadcast: the pruned bench ⊆ the eval key set, which broadcast
+    # already. Otherwise Catalyst's static size estimate under a
+    # pandas-UDF gram build is fiction — without a hint the planner
+    # broadcast a 6.5 GiB unpruned train-gram set at the 5M-doc rung —
+    # so pin the sort-merge join; AQE still splits skewed keys.
+    bench = F.broadcast(bench) if tier == "broadcast" \
+        else bench.hint("merge")
+    n_grams = F.sum(F.col("__h1").isNotNull().cast("long"))
     n_hits = F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-    return (joined.groupBy(id_col, split_col)
+    return (ev_h.join(bench, keys, "left").groupBy(id_col, split_col)
             .agg(n_grams.alias("n_grams"), n_hits.alias("n_hits"))
             .withColumn("contamination",
                         F.when(F.col("n_grams") > 0,
                                F.col("n_hits") / F.col("n_grams"))
-                        .otherwise(F.lit(0.0)))
-            .select(id_col, split_col, "n_grams", "n_hits",
-                    "contamination"))
+                        .otherwise(F.lit(0.0))))
+
+
+def _fused_leakage(df, id_col, text_col, split_col, n, ev, tr,
+                   ev_parts, tr_parts):
+    """split_leakage's fused tier, or None when the eval gram keys
+    overflow `_FUSED_MAX_EVAL_GRAMS`. Keys are `text._gram_lanes_flat`'s
+    128-bit lanes: no gram string is built, per-row dedup is a
+    bytes-view np.unique and the train-side test is numpy."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from juliadb_jl_spark.functions.text import (_doc_unique_pairs,
+                                                 _gram_lanes_flat, tokens)
+    # The per-task cap bounds the transient driver collect on the
+    # overflow path; a skew-induced false overflow only costs speed.
+    cap = max(_FUSED_MAX_EVAL_GRAMS // ev_parts, 50_000)
+
+    def _eval_doc_grams(it):
+        # Job 1: one row per (eval row, distinct gram key). The long
+        # columns carry NO nulls (a nullable int64 degrades to float64
+        # in toPandas and would corrupt hashes above 2⁵³), so a
+        # zero-gram row rides an __m=0 marker and overflow an __m=-1
+        # sentinel.
+        emitted = 0
+        for pdf in it:
+            h1a, h2a, counts = _gram_lanes_flat(pdf["__toks"], n)
+            ids, sps, g1, g2, ms = [], [], [], [], []
+            for di, sp_, (u1, u2) in zip(
+                    pdf["__id"], pdf["__split"],
+                    _doc_unique_pairs(h1a, h2a, counts)):
+                emitted += len(u1)
+                if emitted > cap:
+                    yield pd.DataFrame({"__id": [di], "__split": [sp_],
+                                        "__h1": 0, "__h2": 0, "__m": -1})
+                    return
+                k = max(len(u1), 1)
+                ids += [di] * k
+                sps += [sp_] * k
+                g1 += u1.view(np.int64).tolist() or [0]
+                g2 += u2.view(np.int64).tolist() or [0]
+                ms += [1] * len(u1) or [0]
+            yield pd.DataFrame({"__id": ids, "__split": sps,
+                                "__h1": g1, "__h2": g2, "__m": ms})
+
+    ev_pdf = ev.select(
+        F.col(id_col).alias("__id"), F.col(split_col).alias("__split"),
+        tokens(F.col(text_col)).alias("__toks")).mapInPandas(
+        _eval_doc_grams, T.StructType([
+            T.StructField("__id", df.schema[id_col].dataType),
+            T.StructField("__split", df.schema[split_col].dataType),
+            T.StructField("__h1", T.LongType()),
+            T.StructField("__h2", T.LongType()),
+            T.StructField("__m", T.IntegerType())])).toPandas()
+    if (ev_pdf["__m"] == -1).any() or len(ev_pdf) > _FUSED_MAX_EVAL_GRAMS:
+        return None
+    # per-(id, split) key LISTS, not sets: each row adds its own distinct
+    # grams, exactly as the hashed tail's groupBy(id, split) sums them
+    docs: dict = {}
+    for di, sp_, a1, a2, m_ in zip(*(ev_pdf[c] for c in ev_pdf.columns)):
+        ks = docs.setdefault((di, sp_), [])
+        if m_ > 0:
+            ks.append((int(a1), int(a2)))
+    se = {k for ks in docs.values() for k in ks}
+    bc_se = df.sparkSession.sparkContext.broadcast((np.sort(np.fromiter(
+        (k[0] for k in se), dtype=np.int64, count=len(se))),
+        frozenset(se)))
+
+    def _matched(it):
+        # Job 2: np.isin on the h1 lane is the coarse cut, the exact
+        # (h1, h2) pair set confirms; only candidate keys (task-deduped,
+        # ⊆ S_e) cross the Arrow boundary.
+        s1_cand, pair_set = bc_se.value
+        emitted: set = set()
+        for pdf in it:
+            h1a, h2a, _ = _gram_lanes_flat(pdf["__toks"], n)
+            s1, s2 = h1a.view(np.int64), h2a.view(np.int64)
+            o1, o2 = [], []
+            for i in np.nonzero(np.isin(s1, s1_cand))[0]:
+                key = (int(s1[i]), int(s2[i]))
+                if key in pair_set and key not in emitted:
+                    emitted.add(key)
+                    o1.append(key[0])
+                    o2.append(key[1])
+            if o1:
+                yield pd.DataFrame(
+                    {"__h1": np.array(o1, dtype=np.int64),
+                     "__h2": np.array(o2, dtype=np.int64)})
+
+    m = tr.select(tokens(F.col(text_col)).alias("__toks")) \
+        .mapInPandas(_matched, "__h1 long, __h2 long")
+    # per-task dedup is global only for a single-task train side;
+    # otherwise dedup JVM-side, bounding the collect by |S_e|
+    hits = (m.distinct() if tr_parts > 1 else m).toPandas()
+    h = frozenset(zip(map(int, hits["__h1"]), map(int, hits["__h2"])))
+    rows = []
+    for (di, sp_), ks in docs.items():
+        nh = sum(1 for k in ks if k in h)
+        # numpy scalars from pandas → plain Python for createDataFrame
+        rows.append((di.item() if hasattr(di, "item") else di,
+                     sp_.item() if hasattr(sp_, "item") else sp_,
+                     len(ks), nh, nh / len(ks) if ks else 0.0))
+    # Arrow-backed local result (r9): a list-of-tuples createDataFrame
+    # runs through a pickled Python RDD — a Python worker per slice on
+    # every downstream action (0.62 s / 8.5 CPU-s per action at sf0.1
+    # vs 0.16 s / 0.5 CPU-s as a JVM-local Arrow relation).
+    res = T.StructType([
+        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField(split_col, df.schema[split_col].dataType),
+        T.StructField("n_grams", T.LongType()),
+        T.StructField("n_hits", T.LongType()),
+        T.StructField("contamination", T.DoubleType())])
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=res.fieldNames()), res)
 
 
 def leakage_attribution(train: DataFrame, eval_df: DataFrame,

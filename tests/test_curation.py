@@ -671,58 +671,96 @@ def test_split_leakage_brute_force(spark):
     assert out[4]["n_grams"] == 0 and out[4]["contamination"] == 0.0
 
 
-def test_split_leakage_auto_resamples_after_explicit_tier(spark):
-    """An explicit-tier call memoizes the split counts without the
-    eval-volume sample; a later prune="auto" call on the same frame
-    must still size its tier from the true eval char volume, i.e. leave
-    the same memo entry a fresh auto call does."""
+def test_split_leakage_memo_entry_complete(spark):
+    """Every sizing memo entry is a complete (n_eval, n_train,
+    eval_chars) measurement, and a second call on the same frame leaves
+    it unchanged."""
     rows = [(i, "train" if i % 4 else "eval",
              " ".join(f"w{(i * 7 + j) % 50}" for j in range(30)))
             for i in range(40)]
     df = spark.createDataFrame(rows, ["doc_id", "split", "text"])
     key = (df.semanticHash(), "split", "train", "text")
     CU._SPLIT_SIZE_MEMO.pop(key, None)
-    CU.split_leakage(df, n=5, prune="auto").collect()
-    fresh = CU._SPLIT_SIZE_MEMO[key]
-    assert fresh[2] > 0
-    CU._SPLIT_SIZE_MEMO.pop(key)
-    CU.split_leakage(df, n=5, prune="broadcast").collect()
-    CU.split_leakage(df, n=5, prune="auto").collect()
-    assert CU._SPLIT_SIZE_MEMO[key] == fresh
+    CU.split_leakage(df, n=5).collect()
+    first = CU._SPLIT_SIZE_MEMO[key]
+    CU.split_leakage(df, n=5).collect()
+    assert CU._SPLIT_SIZE_MEMO[key] == first
+    assert first[:2] == (10, 30) and first[2] > 0
 
 
-def test_split_leakage_prune_modes_identical(spark, tables):
-    """The eval-gram prune (broadcast or bloom) must be result-neutral
-    vs the unpruned two-sided shuffle — pruned-away train grams can
-    never match an eval gram, and bloom false positives only admit
-    real train grams that then match nothing."""
+def _leak_key(out):
+    return sorted((r["doc_id"], r["split"], r["n_grams"], r["n_hits"],
+                   round(r["contamination"], 9)) for r in out.collect())
+
+
+def _tier_outputs(df, n, monkeypatch):
+    """split_leakage's output on every tier, plus the fused tier forced
+    to overflow its eval-gram cap and fall back to shuffle."""
+    out = {"auto": _leak_key(CU.split_leakage(df, n=n))}
+    for tier in ("fused", "broadcast", "shuffle"):
+        out[tier] = _leak_key(CU._split_leakage(df, "doc_id", "text",
+                                                "split", "train", n, tier))
+    with monkeypatch.context() as m:
+        m.setattr(CU, "_FUSED_MAX_EVAL_GRAMS", 10)
+        out["fused_overflow"] = _leak_key(CU._split_leakage(
+            df, "doc_id", "text", "split", "train", n, "fused"))
+    return out
+
+
+def test_split_leakage_prune_modes_identical(spark, tables, monkeypatch):
+    """Every tier — fused, hashed broadcast, shuffle, and fused overflow
+    falling back to shuffle — gives the same report on a
+    train/valid/test split of the documents table."""
     docs = tables["documents"].df.select(
         "doc_id", "text",
         F.when(F.col("doc_id") % 10 < 8, "train")
         .otherwise(F.when(F.col("doc_id") % 2 == 0, "valid")
                    .otherwise("test")).alias("split"))
+    out = _tier_outputs(docs, 5, monkeypatch)
+    assert out["shuffle"] and any(r[3] for r in out["shuffle"])
+    for name, got in out.items():
+        assert got == out["shuffle"], name
 
-    def key(rows):
-        return sorted((r["doc_id"], r["split"], r["n_grams"], r["n_hits"],
-                       round(r["contamination"], 9)) for r in rows)
 
-    base = key(CU.split_leakage(docs, n=5, prune=None).collect())
-    assert base == key(CU.split_leakage(docs, n=5,
-                                        prune="broadcast").collect())
-    # tiny bitmap forces a real false-positive rate — still identical
-    assert base == key(CU.split_leakage(docs, n=5, prune="bloom",
-                                        bloom_bits=1 << 10).collect())
-    # fused prune-in-the-gram-build path (r7 default via "auto")
-    assert base == key(CU.split_leakage(docs, n=5,
-                                        prune="fused").collect())
-    assert base == key(CU.split_leakage(docs, n=5,
-                                        prune="auto").collect())
-    # a tiny cap makes "auto" overflow and fall back to the scale-safe
-    # shuffle shape — still identical
-    assert base == key(CU.split_leakage(docs, n=5, prune="auto",
-                                        max_eval_grams=10).collect())
-    with pytest.raises(ValueError):
-        CU.split_leakage(docs, prune="flux")
+def test_split_leakage_repeated_id_agrees_across_tiers(spark, monkeypatch):
+    """A repeated eval id is reported per (id, split), each row adding
+    its own distinct grams — on every tier, the fused one included."""
+    rows = [(1, "train", "a b c d e f g"),
+            (1, "train", "p q r s t u"),
+            (2, "eval", "a b c d e f g"),
+            (2, "eval", "a b c d e x y z"),
+            (3, "valid", "k l m n o j"),
+            (3, "test", "p q r s t u")]
+    df = spark.createDataFrame(rows, "doc_id long, split string, text string")
+    want = [(2, "eval", 7, 4, round(4 / 7, 9)), (3, "test", 2, 2, 1.0),
+            (3, "valid", 2, 0, 0.0)]
+    for name, got in _tier_outputs(df, 5, monkeypatch).items():
+        assert got == want, name
+
+
+def test_split_leakage_broadcast_tier_plan(spark, tables):
+    """The broadcast tier's executed plan joins only on the two long
+    hash lanes — no string-typed join key — and both joins (train-key
+    prune, scoring) are broadcast hash joins."""
+    from tests.test_dsir import _plan_nodes
+    docs = tables["documents"].df.select(
+        "doc_id", "text",
+        F.when(F.col("doc_id") % 5 == 0, "eval").otherwise("train")
+        .alias("split"))
+    out = CU._split_leakage(docs, "doc_id", "text", "split", "train", 5,
+                            "broadcast")
+    out.collect()
+    joins = [nd for nd in _plan_nodes(
+        spark, out._jdf.queryExecution().executedPlan())
+        if "Join" in nd.nodeName()]
+    assert [j.nodeName() for j in joins] == ["BroadcastHashJoin"] * 2, \
+        [j.nodeName() for j in joins]
+    for j in joins:
+        for side in (j.leftKeys(), j.rightKeys()):
+            ks = [side.apply(i) for i in range(side.size())]
+            assert sorted(k.references().head().name() for k in ks) == \
+                ["__h1", "__h2"]
+            assert {k.dataType().simpleString() for k in ks} == {"bigint"}
 
 
 def test_leakage_attribution_golden(spark):

@@ -371,10 +371,11 @@ def test_corpus_diff_matches_pandas(spark, data):
 
 
 # ---------------------------------------------------------------------------
-# split_leakage fused path ≡ shuffle path on adversarial text (r7): the
-# fused tier re-implements gram slicing in Python — it must agree with
-# the declarative arrow_shingles/JVM-tokenizer shape on exotic
-# whitespace, empty-ish docs, unicode, and short documents.
+# split_leakage tiers agree on adversarial text (r7): the fused tier
+# re-implements gram slicing in Python — it must agree with the
+# declarative arrow_shingles/JVM-tokenizer shape of the broadcast and
+# shuffle tiers on exotic whitespace, empty-ish docs, unicode, and short
+# documents, and so must its overflow fallback.
 # ---------------------------------------------------------------------------
 
 _NASTY_WORDS = ["a", "bb", "ccc", "Ω∆", "naïve", "x" * 30, "0", "§"]
@@ -411,15 +412,12 @@ def nasty_docs(draw):
 @settings(max_examples=6, deadline=None,
           suppress_health_check=list(HealthCheck))
 def test_split_leakage_fused_matches_shuffle_on_nasty_text(spark, rows):
-    from juliadb_jl_spark.functions.curation import split_leakage
+    from tests.test_curation import _tier_outputs
     df = spark.createDataFrame(rows, "doc_id long, split string, text string")
-
-    def key(out):
-        return sorted((r["doc_id"], r["split"], r["n_grams"], r["n_hits"],
-                       round(r["contamination"], 9)) for r in out.collect())
-
-    assert key(split_leakage(df, n=3, prune="fused")) == \
-        key(split_leakage(df, n=3, prune=None))
+    with pytest.MonkeyPatch.context() as mp:
+        out = _tier_outputs(df, 3, mp)
+    for name, got in out.items():
+        assert got == out["shuffle"], name
 
 
 @given(rows=nasty_docs())

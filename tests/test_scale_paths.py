@@ -334,10 +334,10 @@ def test_document_ops_never_touch_rdd_on_plan_path(spark, tables,
         DD._spread(docs),
         CU.paragraph_dedup(docs, "doc_id", "text"),
         CU.novelty_scores(docs, "doc_id", "text"),
-        CU.split_leakage(docs.withColumn(
+        CU._split_leakage(docs.withColumn(
             "split", F.when(F.col("doc_id") % 5 == 0, "eval")
-            .otherwise("train")), "doc_id", "text", "split",
-            prune=None),     # the shuffle tier — plan-only, no jobs
+            .otherwise("train")), "doc_id", "text", "split", "train", 5,
+            "shuffle"),      # the shuffle tier — plan-only past sizing
         TX.frequent_phrases(docs, n=3, min_count=2),
         DD.dedup_exact(docs, "doc_id", "text"),
         DD.minhash_signature(docs, "doc_id", "text"),
