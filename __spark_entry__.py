@@ -4118,11 +4118,9 @@ ORDER BY freq DESC, phrase LIMIT 50
 def qa8(spark, sf_dir):
     """Frequent-phrase mining (text.frequent_phrases): top word
     trigrams with corpus count >= 5 — collocation/boilerplate
-    discovery. The Apriori prune drops grams containing any infrequent
-    word MAP-SIDE before the gram shuffle (provably result-neutral:
-    every word of a frequent gram is itself frequent), so the shuffled
-    gram table loses its singleton long tail; the oracle is the brute
-    count the prune is proven equal to."""
+    discovery. The count shuffles 128-bit hashed gram keys built in
+    one fused Arrow pass, never phrase text, and the top-k text is
+    recovered afterwards; the oracle is the brute count."""
     d = read_table(spark, sf_dir, "documents")
     return TX.frequent_phrases(d, n=3, min_count=5, k=50)
 

@@ -848,7 +848,7 @@ def _portable_sets_udf_build(num_hashes: int):
     included) and `_ph_hash_slices` hashes every shingle in a few
     vector ops; mins are the shared `_sig_mins` segmented pass.
     Bit-identical to the explode + portable_hash + 32-min aggregation
-    (`_signature_portable_expr`, kept for the differential test)."""
+    (the JVM reference `signature_portable_expr` in the tests)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -882,37 +882,6 @@ def _portable_sets_udf_build(num_hashes: int):
     return pandas_udf("array<long>")(_sig_fn).asNondeterministic()
 
 
-def _signature_portable_expr(sets_: DataFrame, num_hashes: int) -> DataFrame:
-    """JVM expression twin of the portable Arrow signature (explode +
-    portable_hash base + min aggregation — the pre-r10 shipped shape);
-    kept ONLY for the bit-parity differential test."""
-    a_, b_ = perm_constants(num_hashes)
-    sh = (sets_.select("id", F.explode("shset").alias("sh"))
-          .select("id", portable_hash(F.col("sh")).alias("hb")))
-    mins = [F.expr(f"min(({a_[i]} * hb + {b_[i]}) % {_P31})")
-            .alias(f"h{i}") for i in range(num_hashes)]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
-                      .alias("signature"))
-
-
-def _signature_crcperm_expr(sets_: DataFrame, num_hashes: int) -> DataFrame:
-    """JVM expression twin of the crc32perm Arrow signature (explode +
-    F.crc32 base + 32-min aggregation, the classic shape) — kept ONLY
-    for the bit-parity differential test; the Arrow passes are the
-    shipped path."""
-    a_, b_ = perm_constants(num_hashes)
-    hb = F.crc32(F.encode(F.col("sh"), "UTF-8"))
-    sh = (sets_.select("id", F.explode("shset").alias("sh"))
-          .select("id", hb.alias("hb")))
-    mins = [F.min((F.lit(a_[i]) * F.col("hb") + F.lit(b_[i]))
-                  % F.lit(_P31)).alias(f"h{i}")
-            for i in range(num_hashes)]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
-                      .alias("signature"))
-
-
 def _signature_from_sets(sets_: DataFrame, num_hashes: int,
                          hash_family: str) -> DataFrame:
     """MinHash signatures from a precomputed (id, shset) frame — split
@@ -944,7 +913,7 @@ def _signature_from_sets(sets_: DataFrame, num_hashes: int,
     if hash_family == "portable":
         # r10: fused single Arrow pass (VERDICT r9 #1) — no explode, no
         # groupBy exchange, no per-shingle 193-term CASE polynomial;
-        # bit-identical to _signature_portable_expr (differential test)
+        # bit-identical to the JVM explode+agg reference (tests)
         sig_udf = _portable_sets_udf(num_hashes)
         return (sets_.filter(F.size("shset") > 0)
                 .select("id", sig_udf(F.col("shset")).alias("signature")))
@@ -1406,8 +1375,15 @@ def _poly64_window_fps(col, k: int):
     return out
 
 
+def _check_window_k(k: int) -> None:
+    # k < 1 has no k-token windows; the byte-slice and strided builders
+    # would emit digests of empty or wrapped slices instead of failing
+    if k < 1:
+        raise ValueError(f"need window size k >= 1 (got {k})")
+
+
 def _window_fps(df: DataFrame, id_col: str, text_col: str, k: int,
-                method: str = "arrow", fmt: str = "hex") -> DataFrame:
+                fmt: str = "hex") -> DataFrame:
     """(id, pos, fp): fingerprint of each k-token window (1-based
     pos). md5 keeps the oracle portable; swap a cheaper family at
     deploy scale — the plan shape is identical.
@@ -1416,108 +1392,88 @@ def _window_fps(df: DataFrame, id_col: str, text_col: str, k: int,
     hex string — same equality semantics, half the shuffle width; use
     it wherever the fp never leaves the plan (duplicate_spans), and
     keep hex where the fp IS the artifact (substring_index).
-    ``fmt="u64"`` (r8, VERDICT r7 #6) goes further: an 8-byte int64
+    ``fmt="u64"`` goes further: an 8-byte int64
     fp from crc32-per-token + a vectorized sliding polynomial
     (`_poly64_window_fps`) — no per-window hash call and half bin's
     exchange bytes, at a ~2.6e-3 per-corpus collision probability at
     the 309M-window rung (vs ~0 for md5): acceptable where the fp
     only ever feeds span DETECTION, wrong where it is a persisted
-    artifact.  Arrow method only.
+    artifact.
 
-    Default build is the Arrow fused pass (`_md5_window_digs`); the
-    expression form (``method="expr"``) is the r5 shape, kept for
-    differential testing — it is interpreted HOF work at ~40 µs/window
-    and was the hidden floor under every substring-dedup rung number."""
-    from juliadb_jl_spark.functions.text import tokens
-
-    if fmt not in ("hex", "bin", "u64"):
-        raise ValueError(f"fmt must be 'hex', 'bin' or 'u64' "
-                         f"(got {fmt!r})")
-    if fmt == "u64" and method != "arrow":
-        raise ValueError("fmt='u64' is Arrow-only (no expr twin)")
-    if method == "arrow":
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        kk, raw = k, fmt == "bin"
-
-        if fmt == "u64":
-            def _fps_fn(col):
-                digs_all = _poly64_window_fps(col, kk)
-                return pd.DataFrame(
-                    {"fps": digs_all,
-                     "poss": [list(range(1, len(d) + 1))
-                              for d in digs_all]})
-        else:
-            def _fps_fn(col):
-                fps_out, poss_out = [], []
-                for toks in col:
-                    # Arrow hands array columns over as numpy arrays,
-                    # where `toks or []` raises — explicit None check
-                    digs = ([] if toks is None
-                            else _md5_window_digs(toks, kk, raw))
-                    fps_out.append(digs)
-                    poss_out.append(list(range(1, len(digs) + 1)))
-                return pd.DataFrame({"fps": fps_out, "poss": poss_out})
-
-        _fps_fn.__annotations__ = {"col": pd.Series,
-                                   "return": pd.DataFrame}
-        ftype = {"hex": "string", "bin": "binary", "u64": "long"}[fmt]
-        # fence: explode(arrays_zip(...)) otherwise duplicates the pass
-        _fps = pandas_udf(
-            f"struct<fps:array<{ftype}>,poss:array<int>>")(_fps_fn) \
-            .asNondeterministic()
-        return (_spread(df)
-                .select(F.col(id_col).alias("id"),
-                        _fps(tokens(F.col(text_col))).alias("r"))
-                .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
-                        .alias("s"))
-                .select("id", F.col("s.poss").alias("pos"),
-                        F.col("s.fps").alias("fp")))
-    if method != "expr":
-        raise ValueError(f"method must be 'arrow' or 'expr' "
-                         f"(got {method!r})")
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    md5_of = (lambda c: F.unhex(F.md5(c))) if fmt == "bin" else F.md5
-    wins = F.transform(idx, lambda i: F.struct(
-        i.alias("pos"),
-        md5_of(F.concat_ws(" ", F.slice(toks, i, k))).alias("fp")))
-    wtype = "binary" if fmt == "bin" else "string"
-    wins = F.when(n >= k, wins).otherwise(
-        F.array().cast(f"array<struct<pos:int,fp:{wtype}>>"))
-    return (_spread(df)
-            .select(F.col(id_col).alias("id"), F.explode(wins).alias("w"))
-            .select("id", "w.pos", "w.fp"))
-
-
-def _window_fp_set(df: DataFrame, text_col: str, k: int,
-                   fmt: str = "bin") -> DataFrame:
-    """Per-doc DISTINCT k-window fingerprints as bare (fp) rows — the
-    index-build sibling of `_window_fps` for consumers that need
-    neither positions nor per-occurrence rows (substring_index).
-    Skipping the poss arrays and the struct zip/explode keeps the
-    Arrow transfer to one flat array column, and ``fmt="bin"``
-    (default) emits 16 raw digest bytes so the downstream distinct
-    exchange moves half the key bytes of the hex form."""
+    One build: a fused Arrow pass (`_md5_window_digs`), each window a
+    byte-slice of the pre-joined document, md5-identical to the JVM's
+    md5(concat_ws(" ", slice(tokens, i, k))). The interpreted
+    `transform`+`slice`+`concat_ws` form it replaced (~40 µs/window,
+    the floor under every early substring-dedup rung) is the bit-parity
+    reference in the tests (SCALING.md "Fingerprint builders: one
+    fused path")."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from juliadb_jl_spark.functions.text import tokens
-    if fmt not in ("hex", "bin"):
-        raise ValueError(f"fmt must be 'hex' or 'bin' (got {fmt!r})")
+
+    _check_window_k(k)
+    if fmt not in ("hex", "bin", "u64"):
+        raise ValueError(f"fmt must be 'hex', 'bin' or 'u64' "
+                         f"(got {fmt!r})")
     kk, raw = k, fmt == "bin"
+
+    if fmt == "u64":
+        def _fps_fn(col):
+            digs_all = _poly64_window_fps(col, kk)
+            return pd.DataFrame(
+                {"fps": digs_all,
+                 "poss": [list(range(1, len(d) + 1)) for d in digs_all]})
+    else:
+        def _fps_fn(col):
+            fps_out, poss_out = [], []
+            for toks in col:
+                # Arrow hands array columns over as numpy arrays,
+                # where `toks or []` raises — explicit None check
+                digs = ([] if toks is None
+                        else _md5_window_digs(toks, kk, raw))
+                fps_out.append(digs)
+                poss_out.append(list(range(1, len(digs) + 1)))
+            return pd.DataFrame({"fps": fps_out, "poss": poss_out})
+
+    _fps_fn.__annotations__ = {"col": pd.Series, "return": pd.DataFrame}
+    ftype = {"hex": "string", "bin": "binary", "u64": "long"}[fmt]
+    # fence: explode(arrays_zip(...)) otherwise duplicates the pass
+    _fps = pandas_udf(
+        f"struct<fps:array<{ftype}>,poss:array<int>>")(_fps_fn) \
+        .asNondeterministic()
+    return (_spread(df)
+            .select(F.col(id_col).alias("id"),
+                    _fps(tokens(F.col(text_col))).alias("r"))
+            .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
+                    .alias("s"))
+            .select("id", F.col("s.poss").alias("pos"),
+                    F.col("s.fps").alias("fp")))
+
+
+def _window_fp_set(df: DataFrame, text_col: str, k: int) -> DataFrame:
+    """Per-doc DISTINCT k-window fingerprints as bare (fp) rows of 16
+    raw md5 digest bytes — the index-build sibling of `_window_fps` for
+    consumers that need neither positions nor per-occurrence rows
+    (substring_index). Skipping the poss arrays and the struct
+    zip/explode keeps the Arrow transfer to one flat array column, and
+    the raw bytes let the downstream distinct exchange move half the
+    key bytes of the hex form."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from juliadb_jl_spark.functions.text import tokens
+    _check_window_k(k)
 
     def _set_fn(col):
         return pd.Series([
             [] if toks is None
-            else list(set(_md5_window_digs(toks, kk, raw)))
+            else list(set(_md5_window_digs(toks, k, raw=True)))
             for toks in col])
 
     _set_fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    ftype = "binary" if raw else "string"
     # fence: the explode below otherwise duplicates the pass (§4.4)
-    _fps = pandas_udf(f"array<{ftype}>")(_set_fn).asNondeterministic()
+    _fps = pandas_udf("array<binary>")(_set_fn).asNondeterministic()
     return (_spread(df)
             .select(_fps(tokens(F.col(text_col))).alias("fps"))
             .select(F.explode("fps").alias("fp")))
@@ -2011,7 +1967,7 @@ def dedup_fuzzy_records(df: DataFrame, id_col: str, col: str,
 
 def winnow_fingerprints(df: DataFrame, id_col: str,
                         text_col: str = "text", k: int = 50,
-                        w: int = 4, method: str = "arrow") -> DataFrame:
+                        w: int = 4) -> DataFrame:
     """Winnowed window fingerprints (the MOSS document-fingerprinting
     selection, Schleimer et al. SIGMOD'03): from every run of `w`
     consecutive k-token window fingerprints keep only the minimum
@@ -2027,108 +1983,69 @@ def winnow_fingerprints(df: DataFrame, id_col: str,
 
     Returns (id, pos, fp) — the selected subset of the window table.
 
-    Scale: the r5 shape (``method="window"``: `min(struct(fp,pos))`
-    over an id-partitioned, pos-ordered w-row frame + distinct) read as
-    window-sort bound at the 5M-doc rung (389 s) — but profiling the
-    stages separately showed the interpreted-HOF md5 window BUILD alone
-    costs the full 389 s (~40 µs/window: `transform`+`slice`+`concat_ws`
-    never reach codegen). The default ``method="arrow"`` therefore
-    fuses build and selection into ONE Arrow-batched pass: tokens cross
-    the Arrow boundary once, each k-window is a byte-slice of the
-    pre-joined document (hashlib md5 ≈ 1 µs/window, bit-identical
-    digests), the sliding min is w-1 vectorized numpy passes, and only
-    the selected ~2/(w+1) fraction returns — zero shuffle end to end.
-    5M-doc rung: 41 s vs 389 s (9.5×), identical output (differential
-    + partition-invariance tested). ``method="rowwise"`` (recorded
-    negative result: nested `array_min(slice(...))` HOF, 258 s at SF1
-    alone — 67× the window form) is kept only as documentation of the
-    cliff. Per-row memory is O(doc windows): multi-100k-token documents
-    should be chunked first (chunk_documents), as everywhere else."""
+    Scale: build and selection are ONE Arrow-batched pass: tokens
+    cross the Arrow boundary once, each k-window is a byte-slice of
+    the pre-joined document (hashlib md5 ≈ 1 µs/window, bit-identical
+    to the JVM's md5 of concat_ws), the sliding min is w-1 vectorized
+    numpy passes, and only the selected ~2/(w+1) fraction returns —
+    zero shuffle end to end. The window-frame form (`min(struct(fp,
+    pos))` over an id-partitioned, pos-ordered w-row frame + distinct)
+    is the selection reference in the tests; its interpreted-HOF md5
+    build cost 389 s at the 5M-doc rung against 41 s for this pass,
+    and the nested `array_min(slice(...))` form took 258 s at SF1
+    (SCALING.md "Fingerprint builders: one fused path"). Per-row
+    memory is O(doc windows): multi-100k-token documents should be
+    chunked first (chunk_documents), as everywhere else."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from juliadb_jl_spark.functions.text import tokens
+
+    _check_window_k(k)
     if w < 1:
         raise ValueError(f"need w >= 1 (got {w})")
-    if method == "rowwise":
-        from juliadb_jl_spark.functions.text import tokens
-        toks = tokens(F.col(text_col))
-        n = F.size(toks)
-        warr = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.struct(
-                F.md5(F.concat_ws(" ", F.slice(toks, i, k))).alias("fp"),
-                i.alias("pos")))
-        n_wins = n - (k - 1)
-        sel = F.array_distinct(F.transform(
-            F.sequence(F.lit(1), n_wins - (w - 1)),
-            lambda i: F.array_min(F.slice(warr, i, w))))
-        sel = F.when(n_wins >= w, sel).otherwise(
-            F.array().cast("array<struct<fp:string,pos:int>>"))
-        return (_spread(df)
-                .select(F.col(id_col).alias("id"),
-                        F.explode(sel).alias("s"))
-                .select("id", "s.pos", "s.fp"))
-    if method == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    kk, ww = k, w
 
-        from juliadb_jl_spark.functions.text import tokens
-        kk, ww = k, w
+    def _winnow_sel_fn(col):
+        fps_out, poss_out = [], []
+        for toks in col:
+            nn = 0 if toks is None else len(toks)
+            length = nn - kk + 1 - (ww - 1)   # number of w-starts
+            if length < 1:
+                fps_out.append([])
+                poss_out.append([])
+                continue
+            digs = _md5_window_digs(toks, kk)
+            # hex digests are ascii: S32 bytes order == str order
+            a = np.array(digs, dtype="S32")
+            m = a[:length].copy()
+            idx = np.arange(length)
+            for off in range(1, ww):
+                b = a[off:off + length]
+                take = b < m          # strict: ties keep leftmost
+                m = np.where(take, b, m)
+                idx = np.where(take, np.arange(off, off + length), idx)
+            # a selection's pos determines its fp, so distinct
+            # (fp,pos) == distinct pos — one vectorized unique
+            upos = np.unique(idx)
+            fps_out.append(a[upos].astype("U32").tolist())
+            poss_out.append((upos + 1).tolist())
+        return pd.DataFrame({"fps": fps_out, "poss": poss_out})
 
-        def _winnow_sel_fn(col):
-            fps_out, poss_out = [], []
-            for toks in col:
-                nn = 0 if toks is None else len(toks)
-                length = nn - kk + 1 - (ww - 1)   # number of w-starts
-                if length < 1:
-                    fps_out.append([])
-                    poss_out.append([])
-                    continue
-                digs = _md5_window_digs(toks, kk)
-                # hex digests are ascii: S32 bytes order == str order
-                a = np.array(digs, dtype="S32")
-                m = a[:length].copy()
-                idx = np.arange(length)
-                for off in range(1, ww):
-                    b = a[off:off + length]
-                    take = b < m          # strict: ties keep leftmost
-                    m = np.where(take, b, m)
-                    idx = np.where(take, np.arange(off, off + length),
-                                   idx)
-                # a selection's pos determines its fp, so distinct
-                # (fp,pos) == distinct pos — one vectorized unique
-                upos = np.unique(idx)
-                fps_out.append(a[upos].astype("U32").tolist())
-                poss_out.append((upos + 1).tolist())
-            return pd.DataFrame({"fps": fps_out, "poss": poss_out})
+    # module has `from __future__ import annotations`, so inline
+    # hints arrive as strings pyspark can't resolve — set real ones
+    _winnow_sel_fn.__annotations__ = {"col": pd.Series,
+                                      "return": pd.DataFrame}
+    # fence: explode(arrays_zip(...)) otherwise duplicates the pass
+    _winnow_sel = pandas_udf(
+        "struct<fps:array<string>,poss:array<int>>")(_winnow_sel_fn) \
+        .asNondeterministic()
 
-        # module has `from __future__ import annotations`, so inline
-        # hints arrive as strings pyspark can't resolve — set real ones
-        _winnow_sel_fn.__annotations__ = {"col": pd.Series,
-                                          "return": pd.DataFrame}
-        # fence: explode(arrays_zip(...)) otherwise duplicates the pass
-        _winnow_sel = pandas_udf(
-            "struct<fps:array<string>,poss:array<int>>")(_winnow_sel_fn) \
-            .asNondeterministic()
-
-        sel = _winnow_sel(tokens(F.col(text_col)))
-        return (_spread(df)
-                .select(F.col(id_col).alias("id"), sel.alias("r"))
-                .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
-                        .alias("s"))
-                .select("id", F.col("s.poss").alias("pos"),
-                        F.col("s.fps").alias("fp")))
-    if method != "window":
-        raise ValueError(f"method must be 'rowwise', 'arrow' or "
-                         f"'window' (got {method!r})")
-    from pyspark.sql import Window
-    fps = _window_fps(df, id_col, text_col, k)
-    frame = (Window.partitionBy("id").orderBy("pos")
-             .rowsBetween(0, w - 1))
-    sel = (fps.withColumn("__m", F.min(F.struct("fp", "pos")).over(frame))
-           # only rows that START a full w-window emit a selection —
-           # pos runs 1..n_wins, so starts are pos <= n_wins - w + 1
-           .withColumn("__nw", F.max("pos").over(Window.partitionBy("id")))
-           .filter(F.col("pos") <= F.col("__nw") - (w - 1))
-           .select("id", F.col("__m.pos").alias("pos"),
-                   F.col("__m.fp").alias("fp"))
-           .distinct())
-    return sel
+    sel = _winnow_sel(tokens(F.col(text_col)))
+    return (_spread(df)
+            .select(F.col(id_col).alias("id"), sel.alias("r"))
+            .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
+                    .alias("s"))
+            .select("id", F.col("s.poss").alias("pos"),
+                    F.col("s.fps").alias("fp")))

@@ -669,7 +669,7 @@ def substring_index(df: DataFrame, id_col: str, text_col: str = "text",
     buy simplicity and artifact-size headroom rather than time."""
     from juliadb_jl_spark.functions.dedup import _window_fp_set
     p4 = 4 * df.sparkSession.sparkContext.defaultParallelism
-    return (_window_fp_set(df, text_col, k, fmt="bin")
+    return (_window_fp_set(df, text_col, k)
             .repartition(p4, "fp").distinct()
             .select(F.lower(F.hex("fp")).alias("fp")))
 

@@ -430,18 +430,15 @@ def _memo_udf(key: tuple, maker):
     return u
 
 
-def _gram_join_udf(n: int, drop_empty: bool = True):
-    return _memo_udf(("gram_join", n, drop_empty),
-                     lambda: _gram_join_udf_build(n, drop_empty))
+def _gram_join_udf(n: int):
+    return _memo_udf(("gram_join", n), lambda: _gram_join_udf_build(n))
 
 
-def _gram_join_udf_build(n: int, drop_empty: bool = True):
+def _gram_join_udf_build(n: int):
     """pandas_udf: token array → word n-gram array, built as byte
     slices of the pre-joined text (one join + offset walk per doc,
     ~0.3 µs/gram) instead of the interpreted `transform`+`slice`+
     `concat_ws` HOF (~12–40 µs/gram — the r6 winnow-rung discovery).
-    With `drop_empty` (frequent_phrases' contract) empty tokens are
-    removed to match word_freqs; with drop_empty=False the output is
     BIT-COMPATIBLE with `shingles()` (concat_ws keeps empty strings,
     and so does " ".join). Returns [] for docs with fewer than n
     tokens."""
@@ -451,12 +448,7 @@ def _gram_join_udf_build(n: int, drop_empty: bool = True):
     def _fn(col):
         out = []
         for toks in col:
-            if toks is None:
-                ts = []
-            elif drop_empty:
-                ts = [t for t in toks if t]
-            else:
-                ts = list(toks)
+            ts = [] if toks is None else list(toks)
             nn = len(ts)
             if nn < n:
                 out.append([])
@@ -599,14 +591,12 @@ def arrow_shingles(col: Column, k: int = 3) -> Column:
     explode-heavy call sites (novelty, contamination, attribution,
     split leakage, the minhash/jaccard shingle-set builders); the HOF
     `shingles()` stays for composition inside other expressions."""
-    return _gram_join_udf(k, drop_empty=False)(tokens(col))
+    return _gram_join_udf(k)(tokens(col))
 
 
 def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
                      text_col: str = "text", lowercase: bool = True,
-                     k: int | None = None,
-                     prune: bool = False,
-                     method: str = "arrow") -> DataFrame:
+                     k: int | None = None) -> DataFrame:
     """Frequent-phrase mining: all word n-grams occurring at least
     `min_count` times in the corpus (optionally the top `k` by
     frequency, ties broken by phrase) — collocation discovery,
@@ -616,208 +606,134 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
 
     Scale (100 TB): naive n-gram counting shuffles a gram table whose
     long tail is singleton grams — nearly corpus-token-sized for
-    n >= 3. Since r7 the count rides a 128-bit hashed gram key (see
-    the inline note), which shrinks every shuffle entry to 24 bytes
-    regardless of phrase length; the historical Apriori prune
-    (`prune=True`: a gram with count >= min_count can only consist of
-    words with count >= min_count, so grams containing any infrequent
-    word are dropped before the count shuffle — provably identical
-    output, differential-tested) is KEPT as the verification
-    alternative but is no longer the default: its n broadcast
-    semi-joins over every gram occurrence cost more at the 5M-doc rung
-    than the hashed count they used to protect (r6 prune path 334 s →
-    r7 hashed unpruned ~100 s; the prune's word-table pass alone is
-    9 s). (Historical negative result, kept for the record: carrying
-    the frequent set as a literal map probed inside the per-doc HOF
-    chain re-evaluates interpreted per element and went quadratic —
-    260 s for 50k docs vs ~15 s as broadcast semi-joins.)
+    n >= 3. The count therefore rides a 128-bit hashed gram key (the
+    two `_gram_lanes_flat` lanes, computed inside one fused Arrow pass
+    where tokens cross the boundary once), which shrinks every shuffle
+    entry to 16 bytes regardless of phrase length; no gram string is
+    built on the count side. Text is recovered afterwards by a second
+    fused pass that slices only the phrases whose keys survive.
     Top-k is TakeOrdered after text recovery, so tie-breaks are exact.
+    Lowercasing moves to the whole string pre-split (same JVM lower;
+    splitting is whitespace-based, which case mapping cannot create);
+    empty tokens are dropped, as in word_freqs.
 
-    The gram build itself defaults to the fused Arrow pass
-    (`method="arrow"`: tokens cross the Arrow boundary once, each gram
-    is a byte-slice of the per-doc joined text) — the interpreted-HOF
-    expression build (`method="expr"`, kept differential-tested) costs
-    ~40 µs/gram and was the 5M-doc rung's floor (605 s → r6 re-measure
-    below). Lowercasing moves to the whole string pre-split (same JVM
-    lower; splitting is whitespace-based, which case mapping cannot
-    create)."""
+    The interpreted-HOF gram build (~40 µs/gram) and the Apriori
+    broadcast semi-join prune (334 s vs ~100 s for the hashed count at
+    the 5M-doc rung) were removed after a differential showed equal
+    output; their verdicts are in SCALING.md ("frequent_phrases" and
+    "Fingerprint builders: one fused path")."""
+    import numpy as np
+    import pandas as pd
+
+    from juliadb_jl_spark.functions.curation import _doc_gram_offsets
+    from juliadb_jl_spark.functions.dedup import _spread
     if n < 1:
         raise ValueError(f"need n >= 1 (got {n})")
     if min_count < 1:
         raise ValueError(f"need min_count >= 1 (got {min_count})")
-    from juliadb_jl_spark.functions.dedup import _spread
 
-    fused = method == "arrow" and not prune
-    if method == "arrow":
-        src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-        if not fused:
-            grams = _gram_join_udf(n)(tokens(src))
-    elif method == "expr":
-        toks = tokens(F.col(text_col))
-        if lowercase:
-            toks = F.transform(toks, lambda w: F.lower(w))
-        # tokens() trims only spaces, so leading tabs/newlines can split
-        # to an empty first token; word_freqs drops those (length > 0),
-        # so the grams must too or the Apriori prune stops being
-        # result-neutral.
-        toks = F.filter(toks, lambda w: F.length(w) > 0)
-        nn = F.size(toks)
-        idx = F.sequence(F.lit(1), nn - (n - 1))
-        grams = F.when(nn >= n, F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))) \
-            .otherwise(F.array().cast("array<string>"))
-    else:
-        raise ValueError(f"method must be 'arrow' or 'expr' "
-                         f"(got {method!r})")
+    src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     # The count aggregation rides a 128-bit hashed gram key: phrase
-    # TEXT never crosses the count shuffle, whose entries shrink to 24
-    # bytes however long the phrases are. In the default fused mode
-    # (method="arrow", prune=False) the keys are the two polynomial
-    # lanes of `_gram_lanes_flat` computed INSIDE the Arrow pass — no
-    # gram string is ever materialized on the count side (r8; the r7
-    # shape built every gram string through Arrow and xxhashed it
-    # JVM-side). The prune/expr paths still need gram strings, so they
-    # keep the 2×-seeded-xxhash64 keys — the key family is internal to
-    # one call, never persisted. Text is recovered afterwards from a
-    # second gram pass joined against the (frequent-set-sized) hash
-    # counts with min(phrase) per key; tie-break/top-k semantics stay
-    # exact because ordering happens after recovery. Cross-lane hash
-    # collisions would merge two phrases' counts (probabilistic,
-    # ~1e-20 at 1e9 grams — the documented novelty_scores contract,
-    # same class for either key family).
+    # TEXT never crosses the count shuffle. The keys are the two
+    # polynomial lanes of `_gram_lanes_flat` computed INSIDE the Arrow
+    # pass. Text is recovered afterwards from a second gram pass joined
+    # against the (frequent-set-sized) hash counts with min(phrase) per
+    # key; tie-break/top-k semantics stay exact because ordering happens
+    # after recovery. Cross-lane hash collisions would merge two
+    # phrases' counts (probabilistic, ~1e-20 at 1e9 grams — the
+    # documented novelty_scores contract).
     p4 = 4 * df.sparkSession.sparkContext.defaultParallelism
-    if fused:
-        import numpy as np
-        import pandas as pd
-        nn_ = n
+    sc = df.sparkSession.sparkContext
+    nn_ = n
 
-        def _emit_occ(it):
-            # every gram OCCURRENCE as its 16-byte key pair — nothing
-            # else crosses Arrow on the count side
-            for pdf in it:
-                h1, h2, _ = _gram_lanes_flat(pdf["__toks"], nn_,
-                                             drop_empty=True)
-                if not len(h1):
-                    continue
-                yield pd.DataFrame({"__h1": h1.view(np.int64),
-                                    "__h2": h2.view(np.int64)})
+    def _emit_occ(it):
+        # every gram OCCURRENCE as its 16-byte key pair — nothing else
+        # crosses Arrow on the count side
+        for pdf in it:
+            h1, h2, _ = _gram_lanes_flat(pdf["__toks"], nn_,
+                                         drop_empty=True)
+            if not len(h1):
+                continue
+            yield pd.DataFrame({"__h1": h1.view(np.int64),
+                                "__h2": h2.view(np.int64)})
 
-        toks_src = _spread(df).select(tokens(src).alias("__toks"))
-        # unpruned, the stream's long tail is singleton grams — map-side
-        # partial agg combines nothing and builds a per-task map of
-        # nearly every distinct key (the r6 bounded-agg rung class).
-        # Pre-partition by the hash key so each count map holds
-        # distinct/partitions — 16-byte rows, not phrase text.
-        gc = (toks_src.mapInPandas(_emit_occ, "__h1 long, __h2 long")
-              .repartition(p4, "__h1", "__h2"))
-    else:
-        g = _spread(df).select(F.explode(grams).alias("phrase"))
-        hkeys = [F.xxhash64(F.col("phrase"), F.lit(1)).alias("__h1"),
-                 F.xxhash64(F.col("phrase"), F.lit(2)).alias("__h2")]
-        gc = g
-        if prune:
-            # Apriori prune on the COUNT input only — the recovery pass
-            # needs no prune, its inner join against the frequent-fp
-            # set prunes perfectly by construction.
-            wf = word_freqs(df, text_col, lowercase=lowercase) \
-                .filter(F.col("freq") >= min_count).select("word")
-            words = F.split(F.col("phrase"), " ")
-            for i in range(n):
-                gc = gc.withColumn(f"__w{i}", words.getItem(i)) \
-                    .join(F.broadcast(
-                        wf.withColumnRenamed("word", f"__w{i}")),
-                        f"__w{i}", "left_semi")
-            gc = gc.select("phrase")
-        gc = gc.select(*hkeys)
-        if not prune:
-            gc = gc.repartition(p4, "__h1", "__h2")
+    toks_src = _spread(df).select(tokens(src).alias("__toks"))
+    # the stream's long tail is singleton grams — map-side partial agg
+    # combines nothing and builds a per-task map of nearly every
+    # distinct key (the r6 bounded-agg rung class). Pre-partition by
+    # the hash key so each count map holds distinct/partitions —
+    # 16-byte rows, not phrase text.
+    gc = (toks_src.mapInPandas(_emit_occ, "__h1 long, __h2 long")
+          .repartition(p4, "__h1", "__h2"))
     cnt = (gc.groupBy("__h1", "__h2")
            .agg(F.count(F.lit(1)).alias("freq"))
            .filter(F.col("freq") >= min_count))
 
-    if fused:
-        import numpy as np
-        import pandas as pd
-        from juliadb_jl_spark.functions.curation import _doc_gram_offsets
-        nn_ = n
-        sc = df.sparkSession.sparkContext
+    def _recover(matches, cand_keys=None):
+        # Fused text recovery: a second gram pass that re-derives
+        # (phrase, h1, h2) per occurrence — but slices the phrase
+        # string ONLY for grams that survive the candidate test
+        # (driver-held key set, pushed into the Arrow pass like
+        # split_leakage's fused tier; np.isin on the h1 lane does the
+        # vectorized coarse cut, the exact pair set confirms).
+        # Per-task key-dedup bounds emitted rows by |candidates|.
+        bc = (sc.broadcast((np.sort(
+            np.array([kk_[0] for kk_ in cand_keys], dtype=np.int64)),
+            frozenset(cand_keys)))
+            if cand_keys is not None else None)
 
-        def _recover(matches, cand_keys=None):
-            # Fused text recovery: a second gram pass that re-derives
-            # (phrase, h1, h2) per occurrence — but slices the phrase
-            # string ONLY for grams that survive the candidate test
-            # (driver-held key set, pushed into the Arrow pass like
-            # split_leakage's fused tier; np.isin on the h1 lane does
-            # the vectorized coarse cut, the exact pair set confirms).
-            # Per-task key-dedup bounds emitted rows by |candidates|.
-            bc = (sc.broadcast((np.sort(
-                np.array([kk_[0] for kk_ in cand_keys],
-                         dtype=np.int64)), frozenset(cand_keys)))
-                if cand_keys is not None else None)
-
-            def _emit_phr(it):
-                cand = bc.value if bc is not None else None
-                seen = set()
-                for pdf in it:
-                    col = pdf["__toks"]
-                    h1, h2, counts = _gram_lanes_flat(col, nn_,
-                                                      drop_empty=True)
-                    s1, s2 = h1.view(np.int64), h2.view(np.int64)
-                    phr, o1, o2 = [], [], []
-                    s = 0
-                    for toks, cn in zip(col, counts):
-                        if not cn:
-                            continue
-                        if cand is None:
-                            # full-report recovery: every occurrence
-                            # (key columns sliced, no per-gram Python)
+        def _emit_phr(it):
+            cand = bc.value if bc is not None else None
+            seen = set()
+            for pdf in it:
+                col = pdf["__toks"]
+                h1, h2, counts = _gram_lanes_flat(col, nn_,
+                                                  drop_empty=True)
+                s1, s2 = h1.view(np.int64), h2.view(np.int64)
+                phr, o1, o2 = [], [], []
+                s = 0
+                for toks, cn in zip(col, counts):
+                    if not cn:
+                        continue
+                    if cand is None:
+                        # full-report recovery: every occurrence (key
+                        # columns sliced, no per-gram Python)
+                        ts = [t for t in toks if t]
+                        js, off = _doc_gram_offsets(ts, nn_)
+                        phr.extend(js[off[i]:off[i + nn_] - 1]
+                                   for i in range(cn))
+                        o1.append(s1[s:s + cn])
+                        o2.append(s2[s:s + cn])
+                    else:
+                        # candidate mode: vectorized h1 coarse cut,
+                        # exact pair confirm, per-task key-dedup
+                        idx = np.nonzero(np.isin(s1[s:s + cn],
+                                                 cand[0]))[0]
+                        if len(idx):
                             ts = [t for t in toks if t]
                             js, off = _doc_gram_offsets(ts, nn_)
-                            phr.extend(js[off[i]:off[i + nn_] - 1]
-                                       for i in range(cn))
-                            o1.append(s1[s:s + cn])
-                            o2.append(s2[s:s + cn])
-                        else:
-                            # candidate mode: vectorized h1 coarse cut,
-                            # exact pair confirm, per-task key-dedup
-                            idx = np.nonzero(np.isin(s1[s:s + cn],
-                                                     cand[0]))[0]
-                            if len(idx):
-                                ts = [t for t in toks if t]
-                                js, off = _doc_gram_offsets(ts, nn_)
-                                for i in idx:
-                                    key = (int(s1[s + i]),
-                                           int(s2[s + i]))
-                                    if key not in cand[1] \
-                                            or key in seen:
-                                        continue
-                                    seen.add(key)
-                                    phr.append(
-                                        js[off[i]:off[i + nn_] - 1])
-                                    o1.append(np.array(
-                                        [key[0]], dtype=np.int64))
-                                    o2.append(np.array(
-                                        [key[1]], dtype=np.int64))
-                        s += cn
-                    if phr:
-                        yield pd.DataFrame(
-                            {"phrase": phr,
-                             "__h1": np.concatenate(o1),
-                             "__h2": np.concatenate(o2)})
+                            for i in idx:
+                                key = (int(s1[s + i]), int(s2[s + i]))
+                                if key not in cand[1] or key in seen:
+                                    continue
+                                seen.add(key)
+                                phr.append(js[off[i]:off[i + nn_] - 1])
+                                o1.append(np.array([key[0]],
+                                                   dtype=np.int64))
+                                o2.append(np.array([key[1]],
+                                                   dtype=np.int64))
+                    s += cn
+                if phr:
+                    yield pd.DataFrame({"phrase": phr,
+                                        "__h1": np.concatenate(o1),
+                                        "__h2": np.concatenate(o2)})
 
-            rec = toks_src.mapInPandas(
-                _emit_phr, "phrase string, __h1 long, __h2 long")
-            return (rec.join(matches, ["__h1", "__h2"])
-                    .groupBy("__h1", "__h2", "freq")
-                    .agg(F.min("phrase").alias("phrase"))
-                    .select("phrase", "freq"))
-    else:
-        def _recover(matches, cand_keys=None):
-            return (g.select(F.col("phrase"), *hkeys)
-                    .join(matches, ["__h1", "__h2"])
-                    .groupBy("__h1", "__h2", "freq")
-                    .agg(F.min("phrase").alias("phrase"))
-                    .select("phrase", "freq"))
+        rec = toks_src.mapInPandas(
+            _emit_phr, "phrase string, __h1 long, __h2 long")
+        return (rec.join(matches, ["__h1", "__h2"])
+                .groupBy("__h1", "__h2", "freq")
+                .agg(F.min("phrase").alias("phrase"))
+                .select("phrase", "freq"))
 
     if k is None:
         # Full report: the output IS the frequent set (38M rows at the
@@ -852,7 +768,7 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
                 break
         cand = cnt.filter(F.col("freq") >= kth)
         cand_keys = None
-        if fused and n_cand <= 1_000_000:
+        if n_cand <= 1_000_000:
             # push the candidate-key set INTO the recovery Arrow pass
             # (split_leakage's fused-tier trick): only candidate
             # phrases' text is ever sliced or emitted, and per-task

@@ -150,6 +150,46 @@ def test_incremental_against_chunk_invariant(tables):
 # ---------------------------------------------------------------------------
 
 
+def _window_fps_jvm_ref(df, id_col, text_col, k, fmt="hex"):
+    """Reference k-window table, built entirely in the JVM:
+    md5(concat_ws(" ", slice(tokens, i, k))) per window via
+    `transform`+`slice`+`concat_ws`+`F.md5`. This is the bit-parity
+    reference for the fused Arrow build (`dedup._window_fps`) in its
+    `hex` and `bin` formats. It is interpreted HOF work (~40 µs per
+    window), so it lives here and not in the package."""
+    from juliadb_jl_spark.functions.text import tokens
+    toks = tokens(F.col(text_col))
+    n = F.size(toks)
+    idx = F.sequence(F.lit(1), n - (k - 1))
+    md5_of = (lambda c: F.unhex(F.md5(c))) if fmt == "bin" else F.md5
+    wins = F.transform(idx, lambda i: F.struct(
+        i.alias("pos"),
+        md5_of(F.concat_ws(" ", F.slice(toks, i, k))).alias("fp")))
+    wtype = "binary" if fmt == "bin" else "string"
+    wins = F.when(n >= k, wins).otherwise(
+        F.array().cast(f"array<struct<pos:int,fp:{wtype}>>"))
+    return (df.select(F.col(id_col).alias("id"), F.explode(wins).alias("w"))
+            .select("id", "w.pos", "w.fp"))
+
+
+def _winnow_window_frame_ref(df, id_col, text_col, k, w):
+    """Reference MOSS selection as a window frame over the JVM window
+    table: `min(struct(fp, pos))` over an id-partitioned, pos-ordered
+    w-row frame, kept for rows that start a full w-window, then
+    distinct. Ties go to the leftmost pos, as in the fused selection."""
+    from pyspark.sql import Window
+    fps = _window_fps_jvm_ref(df, id_col, text_col, k)
+    frame = (Window.partitionBy("id").orderBy("pos")
+             .rowsBetween(0, w - 1))
+    return (fps.withColumn("__m", F.min(F.struct("fp", "pos")).over(frame))
+            # pos runs 1..n_wins, so w-window starts are pos <= n_wins-w+1
+            .withColumn("__nw", F.max("pos").over(Window.partitionBy("id")))
+            .filter(F.col("pos") <= F.col("__nw") - (w - 1))
+            .select("id", F.col("__m.pos").alias("pos"),
+                    F.col("__m.fp").alias("fp"))
+            .distinct())
+
+
 def test_winnow_guarantee_and_density(spark):
     """Two docs sharing a >= w+k-1 token verbatim run must share a
     selected fingerprint; the winnowed set must be a subset of the
@@ -191,11 +231,11 @@ def test_winnow_guarantee_and_density(spark):
 
 
 def test_winnow_methods_identical(spark, tables):
-    """All three winnow shapes (arrow fused-build default, rowwise HOF,
-    r5 window-frame) must select EXACTLY the same (id, pos, fp) set, on
-    real documents (varied lengths incl. < k tokens) and on edge docs
-    — including w=1 (every window selected) and non-ascii text (the
-    arrow path hashes utf-8 byte slices; they must equal the JVM md5
+    """The fused Arrow winnow must select EXACTLY the (id, pos, fp) set
+    of the window-frame reference over JVM md5 windows, on real
+    documents (varied lengths incl. < k tokens) and on edge docs —
+    including w=1 (every window selected) and non-ascii text (the
+    fused pass hashes utf-8 byte slices; they must equal the JVM md5
     of concat_ws)."""
     from juliadb_jl_spark.functions.dedup import winnow_fingerprints
     docs = tables["documents"].df.select("doc_id", "text").limit(200)
@@ -205,28 +245,25 @@ def test_winnow_methods_identical(spark, tables):
     docs = docs.unionByName(uni)
     for kk, ww in ((5, 4), (8, 1)):
         a = set(map(tuple, winnow_fingerprints(
-            docs, "doc_id", k=kk, w=ww, method="arrow").collect()))
-        b = set(map(tuple, winnow_fingerprints(
-            docs, "doc_id", k=kk, w=ww, method="window").collect()))
-        c = set(map(tuple, winnow_fingerprints(
-            docs, "doc_id", k=kk, w=ww, method="rowwise").collect()))
-        assert a == b == c and len(a) > 0
+            docs, "doc_id", k=kk, w=ww).collect()))
+        b = set(map(tuple, _winnow_window_frame_ref(
+            docs, "doc_id", "text", kk, ww).collect()))
+        assert a == b and len(a) > 0
     edge = spark.createDataFrame(
         [(1, "only three words"),            # n < k -> no windows
          (2, " ".join(f"x{i}" for i in range(6))),  # n_wins < w
          (3, ""), (4, None)],
         "doc_id long, text string")
-    for m in ("arrow", "rowwise", "window"):
-        assert winnow_fingerprints(edge, "doc_id", k=5, w=4,
-                                   method=m).count() == 0
-    with pytest.raises(ValueError):
-        winnow_fingerprints(edge, "doc_id", method="sortmerge")
+    assert winnow_fingerprints(edge, "doc_id", k=5, w=4).count() == 0
+    assert _winnow_window_frame_ref(edge, "doc_id", "text", 5, 4) \
+        .count() == 0
 
 
 def test_window_fps_arrow_equals_expr(spark, tables):
-    """The Arrow fused window-fp build must emit EXACTLY the r5
-    expression form's (id, pos, fp) table — every substring-dedup op
-    keys on these digests."""
+    """The fused Arrow window-fp build must emit EXACTLY the JVM
+    expression reference's (id, pos, fp) table, in both the hex and
+    the raw-byte format — every substring-dedup op keys on these
+    digests."""
     from juliadb_jl_spark.functions.dedup import _window_fps
     docs = tables["documents"].df.select("doc_id", "text").limit(150)
     uni = spark.createDataFrame(
@@ -234,19 +271,20 @@ def test_window_fps_arrow_equals_expr(spark, tables):
          (9003, None), (9004, "short one")],
         "doc_id long, text string")
     docs = docs.unionByName(uni)
-    a = set(map(tuple, _window_fps(docs, "doc_id", "text", 8,
-                                   method="arrow").collect()))
-    b = set(map(tuple, _window_fps(docs, "doc_id", "text", 8,
-                                   method="expr").collect()))
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError):
-        _window_fps(docs, "doc_id", "text", 8, method="hof")
+    for fmt in ("hex", "bin"):
+        a = {(r[0], r[1], bytes(r[2]) if fmt == "bin" else r[2])
+             for r in _window_fps(docs, "doc_id", "text", 8,
+                                  fmt=fmt).collect()}
+        b = {(r[0], r[1], bytes(r[2]) if fmt == "bin" else r[2])
+             for r in _window_fps_jvm_ref(docs, "doc_id", "text", 8,
+                                          fmt=fmt).collect()}
+        assert a == b and len(a) > 0
 
 
 def test_window_fp_formats_and_set_builder(spark, tables):
-    """fmt="bin" must be the byte-decode of the hex digests in BOTH
-    build methods, and `_window_fp_set` (the fps-only index builder)
-    must emit exactly the distinct fp set of `_window_fps` — the
+    """fmt="bin" must be the byte-decode of the hex digests, and
+    `_window_fp_set` (the fps-only index builder) must emit exactly the
+    distinct fp set of `_window_fps` as raw digest bytes — the
     substring index artifact keys on this equivalence."""
     from juliadb_jl_spark.functions.dedup import (_window_fp_set,
                                                   _window_fps)
@@ -262,20 +300,39 @@ def test_window_fp_formats_and_set_builder(spark, tables):
               for r in _window_fps(docs, "doc_id", "text", 8,
                                    fmt="bin").collect()}
     assert hexed == binned and len(hexed) > 0
-    bexpr = {(r[0], r[1], bytes(r[2]).hex())
-             for r in _window_fps(docs, "doc_id", "text", 8,
-                                  method="expr", fmt="bin").collect()}
-    assert bexpr == hexed
-    set_bin = {bytes(r[0]).hex() for r in
-               _window_fp_set(docs, "text", 8).collect()}
-    set_hex = {r[0] for r in
-               _window_fp_set(docs, "text", 8, fmt="hex").collect()}
-    want = {fp for _, _, fp in hexed}
-    assert set_bin == want and set_hex == want
-    with pytest.raises(ValueError):
-        _window_fp_set(docs, "text", 8, fmt="b64")
+    set_rows = [bytes(r[0]).hex() for r in
+                _window_fp_set(docs, "text", 8).collect()]
+    assert set(set_rows) == {fp for _, _, fp in hexed}
     with pytest.raises(ValueError):
         _window_fps(docs, "doc_id", "text", 8, fmt="b64")
+
+
+def test_window_builders_reject_nonpositive_k(spark):
+    """k < 1 has no k-token windows: every public window op must raise
+    ValueError up front, not emit digests of empty or wrapped slices."""
+    from juliadb_jl_spark.functions import dedup as DD
+    from juliadb_jl_spark.functions import incremental as INC
+    docs = spark.createDataFrame([(1, "a b c"), (2, "a b c d")],
+                                 "doc_id long, text string")
+    index = INC.substring_index(docs, "doc_id", k=2)
+    ops = [
+        lambda k: DD._window_fps(docs, "doc_id", "text", k),
+        lambda k: DD._window_fps(docs, "doc_id", "text", k, fmt="u64"),
+        lambda k: DD._window_fp_set(docs, "text", k),
+        lambda k: DD.winnow_fingerprints(docs, "doc_id", k=k),
+        lambda k: DD.duplicate_spans(docs, "doc_id", k=k),
+        lambda k: DD.dedup_substrings(docs, "doc_id", k=k),
+        lambda k: DD.dedup_substrings_multi(docs, "doc_id", ks=(k,)),
+        lambda k: INC.substring_index(docs, "doc_id", k=k),
+        lambda k: INC.duplicate_spans_against(docs, index, "doc_id",
+                                              k=k),
+        lambda k: INC.dedup_substrings_against(docs, index, "doc_id",
+                                               k=k),
+    ]
+    for op in ops:
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k >= 1"):
+                op(k).collect()
 
 
 def test_winnow_partition_invariant(spark):
@@ -333,5 +390,3 @@ def test_duplicate_spans_u64_fp_matches_md5(spark, tables):
     import pytest
     with pytest.raises(ValueError):
         duplicate_spans(docs, "doc_id", k=8, fp_fmt="hex")
-    with pytest.raises(ValueError):
-        _window_fps(docs, "doc_id", "text", 8, method="expr", fmt="u64")

@@ -492,6 +492,7 @@ def test_minhash_crcperm_three_way_parity(spark):
     JVM expression twin (explode + F.crc32 base + 32-min agg) —
     including empty/None/unicode/dup-window docs, which all forms must
     drop when shingle-less."""
+    from tests.test_property import signature_crcperm_expr
     docs = [(1, "a b c d e f g"), (2, "x y z " * 10), (3, ""),
             (4, None), (5, "déjà vu encore une fois"),
             (6, "a b c d e f g"), (7, "one two")]
@@ -504,7 +505,7 @@ def test_minhash_crcperm_three_way_parity(spark):
                  for r in DD._signature_from_sets(
                      sets_, 16, "crc32perm").collect()}
     expr = {r["id"]: tuple(r["signature"])
-            for r in DD._signature_crcperm_expr(sets_, 16).collect()}
+            for r in signature_crcperm_expr(sets_, 16).collect()}
     assert fused == from_sets == expr
     assert set(fused) == {1, 2, 5, 6} and fused[1] == fused[6]
     # values live in the permutation family's range

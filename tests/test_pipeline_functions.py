@@ -1018,7 +1018,7 @@ def test_dedup_substrings_multi_extends_recall(spark):
 
 
 # ---------------------------------------------------------------------------
-# frequent_phrases (Apriori-pruned n-gram mining)
+# frequent_phrases (hashed-key n-gram mining)
 # ---------------------------------------------------------------------------
 
 
@@ -1035,15 +1035,29 @@ def test_frequent_phrases_golden(spark):
     assert out2 == {"the cat": 3, "cat sat": 2}
 
 
-def test_frequent_phrases_prune_is_result_neutral(spark):
+def test_frequent_phrases_full_report_matches_brute_force(spark):
+    """Full report (k=None) over real documents plus whitespace,
+    unicode and empty edge rows ≡ a driver-side Counter of every word
+    n-gram (leading tab → empty token dropped), for n = 1, 2, 3."""
     from juliadb_jl_spark.functions.text import frequent_phrases
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pruned = {(r["phrase"], r["freq"]) for r in
-              frequent_phrases(d, n=3, min_count=4).collect()}
-    brute = {(r["phrase"], r["freq"]) for r in
-             frequent_phrases(d, n=3, min_count=4,
-                              prune=False).collect()}
-    assert pruned == brute and len(pruned) > 0
+    from tests.test_property import frequent_report, phrase_counts
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .select("doc_id", "text")
+    edge = spark.createDataFrame(
+        [(90001, "\tthe cat sat on the mat"),
+         (90002, "  b  b   b "), (90003, "héllo wörld héllo wörld x"),
+         (90004, ""), (90005, None)], "doc_id long, text string")
+    texts = [r["text"] for r in d.collect()]
+    for data, txt, cases in ((d, texts, ((3, 4), (2, 2), (1, 3))),
+                             (edge, [r["text"] for r in edge.collect()],
+                              ((3, 2), (2, 2), (1, 2)))):
+        for nn, mc in cases:
+            want = frequent_report(phrase_counts(txt, nn), mc)
+            got = sorted(((r["phrase"], r["freq"]) for r in
+                          frequent_phrases(data, n=nn, min_count=mc,
+                                           k=None).collect()),
+                         key=lambda pc: (-pc[1], pc[0]))
+            assert got == want and (len(got) > 0 or data is edge), nn
 
 
 def test_arrow_shingles_bit_equal(spark, tables):
@@ -1066,31 +1080,6 @@ def test_arrow_shingles_bit_equal(spark, tables):
             arrow_shingles(F.col("text"), kk).alias("b")).collect()
         for r in both:
             assert list(r["a"]) == list(r["b"]), r["doc_id"]
-
-
-def test_frequent_phrases_arrow_equals_expr(spark):
-    """The fused Arrow gram build must count exactly what the HOF
-    expression build counts — incl. whitespace edges (leading tab →
-    empty token dropped on both paths), unicode, and n=1."""
-    from juliadb_jl_spark.functions.text import frequent_phrases
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    edge = spark.createDataFrame(
-        [(90001, "\tthe cat sat on the mat"),
-         (90002, "  b  b   b "), (90003, "héllo wörld héllo wörld x"),
-         (90004, ""), (90005, None)], "doc_id long, text string")
-    for nn, mc, pr in ((3, 4, True), (2, 2, False), (1, 3, True)):
-        a = sorted((r["phrase"], r["freq"]) for r in frequent_phrases(
-            d, n=nn, min_count=mc, prune=pr, method="arrow").collect())
-        b = sorted((r["phrase"], r["freq"]) for r in frequent_phrases(
-            d, n=nn, min_count=mc, prune=pr, method="expr").collect())
-        assert a == b and len(a) > 0
-        ea = sorted((r["phrase"], r["freq"]) for r in frequent_phrases(
-            edge, n=nn, min_count=2, prune=pr, method="arrow").collect())
-        eb = sorted((r["phrase"], r["freq"]) for r in frequent_phrases(
-            edge, n=nn, min_count=2, prune=pr, method="expr").collect())
-        assert ea == eb
-    with pytest.raises(ValueError):
-        frequent_phrases(d, method="hof")
 
 
 def test_frequent_phrases_topk_tiebreak(spark):

@@ -420,6 +420,43 @@ def test_split_leakage_fused_matches_shuffle_on_nasty_text(spark, rows):
         assert got == out["shuffle"], name
 
 
+def signature_portable_expr(sets_, num_hashes):
+    """JVM expression reference for the portable-family MinHash
+    signature over an (id, shset) frame: explode + `portable_hash` base
+    + one min aggregation per permutation. The fused Arrow pass must
+    match it bit for bit."""
+    from pyspark.sql import functions as F
+
+    from juliadb_jl_spark.functions.dedup import (_P31, perm_constants,
+                                                  portable_hash)
+    a_, b_ = perm_constants(num_hashes)
+    sh = (sets_.select("id", F.explode("shset").alias("sh"))
+          .select("id", portable_hash(F.col("sh")).alias("hb")))
+    mins = [F.expr(f"min(({a_[i]} * hb + {b_[i]}) % {_P31})")
+            .alias(f"h{i}") for i in range(num_hashes)]
+    return (sh.groupBy("id").agg(*mins)
+            .select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
+                    .alias("signature")))
+
+
+def signature_crcperm_expr(sets_, num_hashes):
+    """JVM expression reference for the crc32perm MinHash signature:
+    explode + `F.crc32` base + one min aggregation per permutation."""
+    from pyspark.sql import functions as F
+
+    from juliadb_jl_spark.functions.dedup import _P31, perm_constants
+    a_, b_ = perm_constants(num_hashes)
+    hb = F.crc32(F.encode(F.col("sh"), "UTF-8"))
+    sh = (sets_.select("id", F.explode("shset").alias("sh"))
+          .select("id", hb.alias("hb")))
+    mins = [F.min((F.lit(a_[i]) * F.col("hb") + F.lit(b_[i]))
+                  % F.lit(_P31)).alias(f"h{i}")
+            for i in range(num_hashes)]
+    return (sh.groupBy("id").agg(*mins)
+            .select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
+                    .alias("signature")))
+
+
 @given(rows=nasty_docs())
 @settings(max_examples=6, deadline=None,
           suppress_health_check=list(HealthCheck))
@@ -438,7 +475,7 @@ def test_minhash_crcperm_fused_matches_expr_on_nasty_text(spark, rows):
                                            num_hashes=8).collect()}
     sets_ = DD._shingle_sets(df, "doc_id", "text", 2)
     expr = {r["id"]: tuple(r["signature"])
-            for r in DD._signature_crcperm_expr(sets_, 8).collect()}
+            for r in signature_crcperm_expr(sets_, 8).collect()}
     assert fused == expr
 
 
@@ -447,7 +484,7 @@ def test_minhash_crcperm_fused_matches_expr_on_nasty_text(spark, rows):
           suppress_health_check=list(HealthCheck))
 def test_minhash_portable_fused_matches_expr_on_nasty_text(spark, rows):
     """portable-family fused signature ≡ its JVM expression twin
-    (_signature_portable_expr, the pre-r10 shipped shape) on exotic
+    (signature_portable_expr, the pre-r10 shipped shape) on exotic
     whitespace/unicode/empty docs — the r10 fused pass re-implements
     the 31-bit char-fold + permutation mins in vectorized numpy, and
     the q36/q67 ORACLE contract depends on this family bit-for-bit, so
@@ -462,8 +499,35 @@ def test_minhash_portable_fused_matches_expr_on_nasty_text(spark, rows):
                  hash_family="portable").collect()}
     sets_ = DD._shingle_sets(df, "doc_id", "text", 2)
     expr = {r["id"]: tuple(r["signature"])
-            for r in DD._signature_portable_expr(sets_, 8).collect()}
+            for r in signature_portable_expr(sets_, 8).collect()}
     assert fused == expr
+
+
+def phrase_counts(texts, n, lowercase=True):
+    """Driver-side brute-force word n-gram count with the
+    `frequent_phrases` tokenization: trim spaces only, split on Java's
+    \\s class (not Python's unicode \\s, which also splits on NBSP),
+    drop empty tokens (word_freqs parity), optionally lowercase."""
+    import re
+    from collections import Counter
+    cnt = Counter()
+    for t in texts:
+        trimmed = (t or "").strip(" ")
+        toks = [] if trimmed == "" else re.split(
+            "[ \t\n\x0b\f\r]+", trimmed)
+        toks = [w.lower() if lowercase else w for w in toks if w]
+        for i in range(len(toks) - n + 1):
+            cnt[" ".join(toks[i:i + n])] += 1
+    return cnt
+
+
+def frequent_report(cnt, min_count, k=None):
+    """The (phrase, freq) rows `frequent_phrases` must return for a
+    brute-force count: freq >= min_count, ordered (freq desc, phrase
+    asc), cut to the top `k` when given."""
+    rows = sorted(((p, c) for p, c in cnt.items() if c >= min_count),
+                  key=lambda pc: (-pc[1], pc[0]))
+    return rows if k is None else rows[:k]
 
 
 @given(rows=nasty_docs(), mc=st.integers(1, 3), k=st.integers(1, 8))
@@ -473,29 +537,20 @@ def test_frequent_phrases_matches_brute_force_on_nasty_text(
         spark, rows, mc, k):
     """Hashed-count + histogram-top-k pipeline ≡ a pure-Python brute
     count with the exact (freq desc, phrase asc) tie-break, on text
-    with tabs/newlines/unicode/empty docs."""
-    import re
-    from collections import Counter
+    with tabs/newlines/unicode/empty docs — for n = 1, 2, 3, both the
+    top-k report and the full report (k=None)."""
+    from pyspark.sql import functions as F
+
     from juliadb_jl_spark.functions.text import frequent_phrases
-    n = 2
     df = spark.createDataFrame([(i, t) for i, _, t in rows],
                                "doc_id long, text string")
-    from pyspark.sql import functions as F
-    cnt = Counter()
-    for _, _, t in rows:
-        trimmed = (t or "").strip(" ")   # tokens(): trim spaces only
-        toks = [] if trimmed == "" else re.split(
-            "[ \t\n\x0b\f\r]+", trimmed)   # Java \s, not unicode \s
-        # the phrases contract drops empty tokens (word_freqs parity)
-        toks = [w.lower() for w in toks if w]
-        for i in range(len(toks) - n + 1):
-            cnt[" ".join(toks[i:i + n])] += 1
-    want = sorted(((p, c) for p, c in cnt.items() if c >= mc),
-                  key=lambda pc: (-pc[1], pc[0]))[:k]
-    got = [(r["phrase"], r["freq"]) for r in
-           frequent_phrases(df, n=n, min_count=mc, k=k)
-           .orderBy(F.desc("freq"), F.asc("phrase")).collect()]
-    assert got == want
+    for n in (1, 2, 3):
+        cnt = phrase_counts([t for _, _, t in rows], n)
+        for kk in (k, None):
+            got = [(r["phrase"], r["freq"]) for r in
+                   frequent_phrases(df, n=n, min_count=mc, k=kk)
+                   .orderBy(F.desc("freq"), F.asc("phrase")).collect()]
+            assert got == frequent_report(cnt, mc, kk), (n, kk)
 
 
 @given(rows=nasty_docs())

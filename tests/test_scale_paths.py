@@ -348,3 +348,31 @@ def test_document_ops_never_touch_rdd_on_plan_path(spark, tables,
         # poisoned property would fire if any plan path touched .rdd
         df._jdf.queryExecution().analyzed()
         assert len(df.columns) > 0
+
+
+def test_default_driver_heap_fits_the_host(monkeypatch):
+    """With SPARK_GRAFT_DRIVER_MEM unset the driver heap is 16g capped
+    at half the physical RAM: a 15 GiB host gets 7680m, a 64 GiB host
+    16384m, and a host whose RAM cannot be read keeps 16g."""
+    import os
+
+    from juliadb_jl_spark import session
+    page = 4096
+
+    def fake(gib):
+        vals = {"SC_PAGE_SIZE": page,
+                "SC_PHYS_PAGES": gib * (1 << 30) // page}
+        return lambda name: vals[name]
+
+    monkeypatch.setattr(os, "sysconf", fake(15))
+    assert session._default_driver_mem() == "7680m"
+    monkeypatch.setattr(os, "sysconf", fake(64))
+    assert session._default_driver_mem() == "16384m"
+    monkeypatch.setattr(os, "sysconf", fake(0))
+    assert session._default_driver_mem() == "512m"
+
+    def broken(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(os, "sysconf", broken)
+    assert session._default_driver_mem() == "16g"
