@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 _EVENTS: list[dict] = []
 
 
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes the session's JVM has compiled so far: the
+    sample count of Spark's codegen compile-time histogram.  A class
+    served from the codegen cache is not compiled again, so the
+    difference of two reads is what a block of work compiled."""
+    return int(spark.sparkContext._jvm.org.apache.spark.metrics.source
+               .CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
 @contextmanager
 def tracktime(label: str, spark: SparkSession | None = None):
     """Context manager timing a block of engine work:
@@ -23,17 +32,22 @@ def tracktime(label: str, spark: SparkSession | None = None):
         with tracktime("load+groupby", spark):
             out = jdb.groupby(...).collect()
 
-    Records wall seconds and how many Spark jobs/stages the block ran.
-    `timings()` returns everything recorded so far as a pandas frame
-    (reference `fetch_timings!` → time_table shape)."""
+    Records elapsed seconds (a monotonic clock; ``ts`` is the wall
+    timestamp at the block's end), how many Spark jobs/stages the block
+    ran, and how many generated classes it compiled (``n_compiled``;
+    0 when every class came from the codegen cache).  `timings()`
+    returns everything recorded so far as a pandas frame (reference
+    `fetch_timings!` → time_table shape)."""
     spark = spark or SparkSession.getActiveSession()
     tracker = spark.sparkContext.statusTracker()
     jobs0 = set(tracker.getJobIdsForGroup(None) or [])
-    t0 = time.time()
+    compiled0 = compiled_classes(spark)
+    t0 = time.perf_counter()
     try:
         yield
     finally:
-        elapsed = time.time() - t0
+        elapsed = time.perf_counter() - t0
+        n_compiled = compiled_classes(spark) - compiled0
         jobs1 = set(tracker.getJobIdsForGroup(None) or [])
         new_jobs = jobs1 - jobs0
         n_stages = 0
@@ -43,13 +57,13 @@ def tracktime(label: str, spark: SparkSession | None = None):
                 n_stages += len(info.stageIds)
         _EVENTS.append({"label": label, "seconds": round(elapsed, 4),
                         "n_jobs": len(new_jobs), "n_stages": n_stages,
-                        "ts": time.time()})
+                        "n_compiled": n_compiled, "ts": time.time()})
 
 
 def timings() -> pd.DataFrame:
     """All recorded blocks (reference fetch_timings!)."""
-    return pd.DataFrame(_EVENTS,
-                        columns=["label", "seconds", "n_jobs", "n_stages", "ts"])
+    return pd.DataFrame(_EVENTS, columns=["label", "seconds", "n_jobs",
+                                          "n_stages", "n_compiled", "ts"])
 
 
 def reset_timings() -> None:

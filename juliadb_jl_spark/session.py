@@ -34,6 +34,14 @@ def get_spark(app_name: str = "juliadb_jl_spark",
     AQE is on so shuffle partition counts re-plan at runtime; on a real
     cluster the explicit ``shuffle.partitions`` becomes the AQE initial
     value rather than a fixed fanout.
+
+    Like every builder conf, the settings apply only when
+    ``getOrCreate`` creates the session.  The codegen class-cache size
+    is stricter still: it is a static conf that Spark reads once per
+    JVM, when the first generated class is compiled.  It takes effect
+    only if that first compile runs under a session this function
+    built; a JVM whose first query ran under another session keeps
+    that session's cache size until it exits.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -74,6 +82,15 @@ def get_spark(app_name: str = "juliadb_jl_spark",
         # annotation on analysis errors (r9: q36 build 2.3s -> see
         # OPTIMIZATION_r09.md).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Compile each generated class once per session.  Spark's LRU
+        # cache of generated classes defaults to 100 entries, so it
+        # thrashes on any session whose working set is above 100
+        # classes: the 18 analytics contract queries generate over 200,
+        # and every later round recompiled them all with Janino and ran
+        # them interpreted again.  2048 holds the census
+        # of a whole sf0.01 contract pass, 1,966 classes (SCALING.md,
+        # "Global posture").
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     # Env-level conf passthrough (r9): "k=v;k=v" in SPARK_GRAFT_EXTRA_CONF
     # applies before caller extra_conf — used for A/B measurement and for

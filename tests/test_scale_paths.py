@@ -376,3 +376,38 @@ def test_default_driver_heap_fits_the_host(monkeypatch):
 
     monkeypatch.setattr(os, "sysconf", broken)
     assert session._default_driver_mem() == "16g"
+
+
+# Contract queries whose generated code is the same on every run of the
+# query (q9g and q9y are left out: their second run in a session generates
+# a few classes the first did not).  One pass generates well over 100
+# classes, Spark's default codegen cache size.
+_SESSION_QUERIES = [
+    "q01_pricing_summary", "q03_map_compute", "q05_join_inner",
+    "q06_join_left", "q07_join_outer", "q09_broadcast_3way",
+    "q11_asofjoin", "q14_groupby_median", "q17_hist", "q21_window_rank",
+    "q22_window_lag", "q23_group_normalize", "q24_topk_global",
+    "q26_distinct", "q29_stack", "q32_tumbling_window", "q33_sessionize",
+    "q99_shipping_priority", "qaf_nation_volume", "qam_min_cost_supplier",
+]
+
+
+def test_codegen_cache_holds_a_session_working_set(spark):
+    """A second pass over a session's queries compiles no generated
+    class: the codegen cache holds the whole working set.  With Spark's
+    100-entry default the LRU cache evicts every class of the pass
+    before it is reused, and the second pass recompiles all of them."""
+    import __spark_entry__ as E
+
+    from juliadb_jl_spark.plans.diagnostics import compiled_classes
+    from tests.conftest import SF_DIR
+    qs = E.queries()
+
+    def one_pass():
+        c0 = compiled_classes(spark)
+        for name in _SESSION_QUERIES:
+            qs[name](spark, SF_DIR).toPandas()
+        return compiled_classes(spark) - c0
+
+    one_pass()
+    assert one_pass() == 0

@@ -134,12 +134,17 @@ def test_tracktime_diagnostics(spark, tables):
     jdb.reset_timings()
     with jdb.tracktime("count-orders", spark):
         tables["orders"].df.count()
-    with jdb.tracktime("agg-lineitem", spark):
-        tables["lineitem"].df.groupBy("l_returnflag").count().collect()
+    for _ in range(2):
+        with jdb.tracktime("agg-lineitem", spark):
+            tables["lineitem"].df.groupBy("l_returnflag").count().collect()
     t = jdb.timings()
-    assert list(t["label"]) == ["count-orders", "agg-lineitem"]
+    assert list(t["label"]) == ["count-orders", "agg-lineitem",
+                                "agg-lineitem"]
     assert (t["seconds"] > 0).all()
     assert (t["n_jobs"] >= 1).all()
+    # the repeated block finds every generated class in the codegen cache
+    assert (t["n_compiled"] >= 0).all()
+    assert t["n_compiled"].iloc[2] == 0
 
 
 def test_innerjoin_alias(tables):

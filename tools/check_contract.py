@@ -7,6 +7,14 @@ Usage: python tools/check_contract.py [sf_dir] [query_name ...]
 
 --json OUT        write a per-query JSON artifact (the per-round
                   CORRECTNESS_SF1_r{N}.json rung record, VERDICT r7 #7).
+                  Each query also records ``compiled``, the generated
+                  classes it compiled, and the artifact records the
+                  codegen cache size, the total compiled and the JVM's
+                  Metaspace bytes before and after the sweep: the class
+                  census that sizes `get_spark`'s codegen cache (run
+                  once more with SPARK_GRAFT_EXTRA_CONF=
+                  "spark.sql.codegen.cache.maxEntries=100" for Spark's
+                  default).
 --sliced-oracle   for the queries in SLICED (q35/qa7), whose DuckDB
                   oracles are infeasible above sf0.1 (~40-min run /
                   >78 GB spill at sf1 — VERDICT r7 #3), fall back to a
@@ -118,6 +126,16 @@ def _full_corpus_invariants(name: str, pdf: pd.DataFrame) -> list[str]:
     return probs
 
 
+def _metaspace_bytes(spark) -> int:
+    """Used bytes of the driver JVM's Metaspace pool (generated classes
+    live there until the codegen cache drops them)."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    for pool in mf.getMemoryPoolMXBeans():
+        if pool.getName() == "Metaspace":
+            return int(pool.getUsage().getUsed())
+    return -1
+
+
 def canon(pdf: pd.DataFrame) -> str:
     cols = sorted(pdf.columns)
     pdf = pdf[cols].copy()
@@ -145,8 +163,10 @@ def main():
     sf = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     import __spark_entry__ as E
+    from juliadb_jl_spark.plans.diagnostics import compiled_classes
     from juliadb_jl_spark.session import get_spark
     spark = get_spark("contract-check", cpus=16, shuffle_partitions=16)
+    compiled0, meta0 = compiled_classes(spark), _metaspace_bytes(spark)
 
     # Fresh DuckDB connection per oracle (r9): at the sf10 rung a
     # long-lived connection accumulated state across big/interrupted
@@ -206,118 +226,128 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if sliced_mode and name in mods and mods[name] > 1:
-            st = _check_sliced(spark, E, None, sf, name, fn,
-                               osql[name], mods[name], cross)
-            records[name] = st
-            if st["status"] == "pass_sliced":
-                n_pass += 1
-            elif st["status"] == "invariants_only":
-                # invariants green, value compare over the capacity
-                # budget — ONE booking (capacity), so the four category
-                # counts always sum to the number of queries checked
-                n_capacity += 1
-            else:
-                n_fail += 1
-            continue
-        t0 = time.time()
+        c0 = compiled_classes(spark)
         try:
-            sdf, cap = _with_timeout(
-                lambda: fn(spark, sf).toPandas(),
-                spark.sparkContext.cancelAllJobs, "spark", name)
-            if cap:
-                print(f"CAP   {name}: spark exceeded {q_timeout:.0f}s")
-                records[name] = cap
-                n_capacity += 1
+            if sliced_mode and name in mods and mods[name] > 1:
+                st = _check_sliced(spark, E, None, sf, name, fn,
+                                   osql[name], mods[name], cross)
+                records[name] = st
+                if st["status"] == "pass_sliced":
+                    n_pass += 1
+                elif st["status"] == "invariants_only":
+                    # invariants green, value compare over the capacity
+                    # budget — ONE booking (capacity), so the four
+                    # category counts always sum to the number of
+                    # queries checked
+                    n_capacity += 1
+                else:
+                    n_fail += 1
                 continue
-        except Exception as ex:
-            print(f"FAIL  {name}: spark error: {ex}")
-            records[name] = {"status": "fail", "error": f"spark: {ex}"}
-            n_fail += 1
-            continue
-        el = time.time() - t0
-        if name not in osql:
-            print(f"rows  {name}: {len(sdf)} rows ({el:.1f}s) [no oracle]")
-            records[name] = {"status": "rows_only", "rows": len(sdf),
-                             "sec": round(el, 2)}
-            n_rowsonly += 1
-            continue
-        try:
-            con = _fresh_con()
+            t0 = time.time()
             try:
-                odf, cap = _with_timeout(
-                    lambda: con.execute(osql[name]).df(),
-                    con.interrupt, "oracle", name)
-            finally:
-                # close promptly: an open connection keeps its worker
-                # threads and any spilled/retained query memory — 7
-                # unclosed ones starved the process of threads at sf10
+                sdf, cap = _with_timeout(
+                    lambda: fn(spark, sf).toPandas(),
+                    spark.sparkContext.cancelAllJobs, "spark", name)
+                if cap:
+                    print(f"CAP   {name}: spark exceeded {q_timeout:.0f}s")
+                    records[name] = cap
+                    n_capacity += 1
+                    continue
+            except Exception as ex:
+                print(f"FAIL  {name}: spark error: {ex}")
+                records[name] = {"status": "fail", "error": f"spark: {ex}"}
+                n_fail += 1
+                continue
+            el = time.time() - t0
+            if name not in osql:
+                print(f"rows  {name}: {len(sdf)} rows ({el:.1f}s) [no oracle]")
+                records[name] = {"status": "rows_only", "rows": len(sdf),
+                                 "sec": round(el, 2)}
+                n_rowsonly += 1
+                continue
+            try:
+                con = _fresh_con()
                 try:
-                    con.close()
-                except Exception:
-                    pass
-            if cap:
-                print(f"CAP   {name}: oracle exceeded {q_timeout:.0f}s "
-                      f"(engine side finished: {len(sdf)} rows)")
-                cap["rows"] = len(sdf)
-                records[name] = cap
-                n_capacity += 1
+                    odf, cap = _with_timeout(
+                        lambda: con.execute(osql[name]).df(),
+                        con.interrupt, "oracle", name)
+                finally:
+                    # close promptly: an open connection keeps its worker
+                    # threads and any spilled/retained query memory — 7
+                    # unclosed ones starved the process of threads at sf10
+                    try:
+                        con.close()
+                    except Exception:
+                        pass
+                if cap:
+                    print(f"CAP   {name}: oracle exceeded {q_timeout:.0f}s "
+                          f"(engine side finished: {len(sdf)} rows)")
+                    cap["rows"] = len(sdf)
+                    records[name] = cap
+                    n_capacity += 1
+                    continue
+            except Exception as ex:
+                if "Out of Memory" in str(ex):
+                    # DuckDB OOM is the same class as the timeout: the
+                    # ORACLE exceeded local capacity, the engine finished
+                    print(f"CAP   {name}: oracle out of memory "
+                          f"(engine side finished: {len(sdf)} rows)")
+                    records[name] = {"status": "capacity", "phase": "oracle",
+                                     "error": "oracle OOM", "rows": len(sdf)}
+                    n_capacity += 1
+                    continue
+                print(f"FAIL  {name}: oracle error: {ex}")
+                records[name] = {"status": "fail", "error": f"oracle: {ex}"}
+                n_fail += 1
                 continue
-        except Exception as ex:
-            if "Out of Memory" in str(ex):
-                # DuckDB OOM is the same class as the timeout: the
-                # ORACLE exceeded local capacity, the engine finished
-                print(f"CAP   {name}: oracle out of memory "
-                      f"(engine side finished: {len(sdf)} rows)")
-                records[name] = {"status": "capacity", "phase": "oracle",
-                                 "error": "oracle OOM", "rows": len(sdf)}
-                n_capacity += 1
-                continue
-            print(f"FAIL  {name}: oracle error: {ex}")
-            records[name] = {"status": "fail", "error": f"oracle: {ex}"}
-            n_fail += 1
-            continue
-        problems = []
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if not problems and canon(sdf) != canon(odf):
-            problems.append("value hash mismatch")
-        # Dtype-class guard (r7): an int-vs-float mismatch (e.g. an
-        # uncast DuckDB sum(CASE) returning HUGEINT→float64 against
-        # Spark's int64) passes THIS canonicalizing hash but fails a
-        # repr-sensitive hasher — it red-flagged q9j/q9k/q9r in the
-        # driver for two rounds. Treat as a FAILURE here so it can
-        # never ship silently again.
-        if not problems:
-            def _dc(s):
-                if pd.api.types.is_float_dtype(s):
-                    return "float"
-                if pd.api.types.is_integer_dtype(s):
-                    return "int"
-                if pd.api.types.is_bool_dtype(s):
-                    return "bool"
-                if pd.api.types.is_datetime64_any_dtype(s):
-                    return "datetime"
-                return "object"
-            mism = [f"{c}: spark={sdf[c].dtype} oracle={odf[c].dtype}"
-                    for c in sdf.columns if _dc(sdf[c]) != _dc(odf[c])]
-            # (the r7 dtype-canary exemption is gone: the experiment
-            # concluded and its oracle is now BIGINT-cast like every
-            # other, so the canary is held to the same guard)
-            if mism:
-                problems.append("dtype mismatch: " + "; ".join(mism))
-        if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-            records[name] = {"status": "fail", "rows": len(sdf),
-                             "problems": problems}
-            n_fail += 1
-        else:
-            print(f"PASS  {name}: {len(sdf)} rows ({el:.1f}s)")
-            records[name] = {"status": "pass", "rows": len(sdf),
-                             "sec": round(el, 2)}
-            n_pass += 1
+            problems = []
+            if sorted(sdf.columns) != sorted(odf.columns):
+                problems.append(f"cols {sorted(sdf.columns)} vs "
+                                f"{sorted(odf.columns)}")
+            if len(sdf) != len(odf):
+                problems.append(f"rows {len(sdf)} vs {len(odf)}")
+            if not problems and canon(sdf) != canon(odf):
+                problems.append("value hash mismatch")
+            # Dtype-class guard (r7): an int-vs-float mismatch (e.g. an
+            # uncast DuckDB sum(CASE) returning HUGEINT→float64 against
+            # Spark's int64) passes THIS canonicalizing hash but fails a
+            # repr-sensitive hasher — it red-flagged q9j/q9k/q9r in the
+            # driver for two rounds. Treat as a FAILURE here so it can
+            # never ship silently again.
+            if not problems:
+                def _dc(s):
+                    if pd.api.types.is_float_dtype(s):
+                        return "float"
+                    if pd.api.types.is_integer_dtype(s):
+                        return "int"
+                    if pd.api.types.is_bool_dtype(s):
+                        return "bool"
+                    if pd.api.types.is_datetime64_any_dtype(s):
+                        return "datetime"
+                    return "object"
+                mism = [f"{c}: spark={sdf[c].dtype} oracle={odf[c].dtype}"
+                        for c in sdf.columns if _dc(sdf[c]) != _dc(odf[c])]
+                # (the r7 dtype-canary exemption is gone: the experiment
+                # concluded and its oracle is now BIGINT-cast like every
+                # other, so the canary is held to the same guard)
+                if mism:
+                    problems.append("dtype mismatch: " + "; ".join(mism))
+            if problems:
+                print(f"FAIL  {name}: {'; '.join(problems)}")
+                records[name] = {"status": "fail", "rows": len(sdf),
+                                 "problems": problems}
+                n_fail += 1
+            else:
+                print(f"PASS  {name}: {len(sdf)} rows ({el:.1f}s)")
+                records[name] = {"status": "pass", "rows": len(sdf),
+                                 "sec": round(el, 2)}
+                n_pass += 1
+        finally:
+            # generated classes the query compiled (0 when the
+            # codegen cache served every one): the class census
+            if name in records:
+                records[name]["compiled"] = compiled_classes(spark) - c0
+
     # cross-consistency of the two sliced full-corpus runs: the q35
     # pair count must equal qa7's n_pairs at threshold 0.5 (both are
     # "pairs with jaccard >= 0.5", computed through different prune
@@ -334,11 +364,22 @@ def main():
     cap_note = f", {n_capacity} capacity" if n_capacity else ""
     print(f"\n{n_pass} pass, {n_rowsonly} rows-only, "
           f"{n_fail} fail{cap_note}")
+    codegen = {
+        "cache_max_entries": int(spark.conf.get(
+            "spark.sql.codegen.cache.maxEntries")),
+        "compiled": compiled_classes(spark) - compiled0,
+        "metaspace_bytes_start": meta0,
+        "metaspace_bytes_end": _metaspace_bytes(spark)}
+    print(f"codegen: {codegen['compiled']} classes compiled "
+          f"(cache {codegen['cache_max_entries']}), Metaspace "
+          f"{meta0 / 2**20:.1f} -> "
+          f"{codegen['metaspace_bytes_end'] / 2**20:.1f} MiB")
     if json_out:
         with open(json_out, "w") as fh:
             json.dump({"sf_dir": sf, "sliced_oracle": sliced_mode,
                        "n_pass": n_pass, "n_rows_only": n_rowsonly,
                        "n_fail": n_fail, "n_capacity": n_capacity,
+                       "codegen": codegen,
                        "queries": records}, fh, indent=1)
         print(f"wrote {json_out}")
     sys.exit(1 if n_fail else 0)
