@@ -687,8 +687,8 @@ def q35(spark, sf_dir):
 # q36_minhash_lsh / q37_simhash are defined in the portable-family
 # section below (after the _charfold_sql/_SH_CTE oracle helpers): since
 # r9 the driver-checked entries default to the portable hash family so
-# both are FULL-oracle (VERDICT r8 #3).  The crc32perm/xxhash64 scale
-# families stay the library defaults; the bench HEADLINE measures the
+# both are FULL-oracle (VERDICT r8 #3).  The scale families, crc32perm
+# (MinHash) and xxhash64 (SimHash), stay the library defaults; the bench HEADLINE measures the
 # scale path via qb0 below (q36's old body verbatim), and the 3-way
 # bit-parity tests pin the families to each other.
 
@@ -1287,7 +1287,7 @@ FROM hb, perm GROUP BY 1, 2
 """)
 def q67(spark, sf_dir):
     """MinHash signatures, portable family — every signature value is
-    oracle-checked (the xxhash64 q36 counterpart is rows-only)."""
+    oracle-checked (the crc32perm qb0 counterpart is rows-only)."""
     d = read_table(spark, sf_dir, "documents")
     sig = DD.minhash_signature(d, "doc_id", k=3, num_hashes=_MH_N,
                                hash_family="portable")
@@ -1354,9 +1354,10 @@ def q69(spark, sf_dir):
 # r9 (VERDICT r8 #3): the driver-checked q36/q37 ENTRIES default to the
 # portable family so both are value-checked end-to-end — signatures,
 # band keys, candidate join, verify — not rows-only.  The library
-# defaults are unchanged (crc32perm / xxhash64 = the 100-TB families);
-# the bench HEADLINE measures that path via qb0_minhash_lsh_scale and
-# the 3-way bit-parity property tests pin the families to each other.
+# defaults are unchanged (crc32perm MinHash / xxhash64 SimHash = the
+# 100-TB families); the bench HEADLINE measures that path via
+# qb0_minhash_lsh_scale and the 3-way bit-parity property tests pin the
+# families to each other.
 
 _MH_N32 = 32
 _MH_A32, _MH_B32 = DD.perm_constants(_MH_N32)
@@ -2881,7 +2882,7 @@ def q9c(spark, sf_dir):
     batch or index self-join), candidates verified with exact Jaccard
     computed on just the matched corpus docs (semi-join prune). Portable
     hash family ⇒ the full incremental pipeline is value-checked; the
-    xxhash64 default is the 100-TB path (equality with the cross-parity
+    crc32perm default is the 100-TB path (equality with the cross-parity
     slice of the self-join pipeline is tested for it)."""
     d = read_table(spark, sf_dir, "documents")
     old = d.filter(F.col("doc_id") % 2 == 0)

@@ -646,6 +646,24 @@ def perm_constants(n: int, seed: int = 7) -> tuple[list[int], list[int]]:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+_MINHASH_FAMILIES = ("crc32perm", "portable")
+_SIMHASH_FAMILIES = ("xxhash64", "portable")
+
+
+def _check_hash_params(hash_family: str, families: tuple[str, ...],
+                       num_hashes: int | None = None,
+                       bands: int | None = None) -> None:
+    """Reject a hash family outside `families` — a typo would otherwise
+    reach another family's branch and return its signatures — and a
+    band split that does not cut `num_hashes` into equal rows."""
+    if hash_family not in families:
+        raise ValueError(f"hash_family must be one of {families} "
+                         f"(got {hash_family!r})")
+    if bands is not None and (bands < 1 or num_hashes % bands):
+        raise ValueError(f"bands must be >= 1 and divide num_hashes "
+                         f"(got num_hashes={num_hashes}, bands={bands})")
+
+
 def _sig_mins(hb, lens, num_hashes: int, a_, b_):
     """Batch core of the crc32perm signature: segmented per-doc minima
     of (a_i·hb + b_i) mod 2^31-1 over the flat base-hash array.  Each
@@ -886,19 +904,16 @@ def _signature_from_sets(sets_: DataFrame, num_hashes: int,
                          hash_family: str) -> DataFrame:
     """MinHash signatures from a precomputed (id, shset) frame — split
     out so minhash_lsh_pairs can reuse ONE persisted shingle pass for
-    both the signature aggregation and the verify join (one corpus scan,
-    not two).
+    both the signature and the verify join (one corpus scan, not two).
 
-    Families: "crc32perm" (default at the call sites) computes the
-    whole signature in one Arrow pass per doc — no explode, no groupBy,
-    no exchange (5M-doc rung: see SCALING.md) — using hash_i(s) =
-    (a_i·crc32(s) + b_i) mod 2^31-1, the datasketch-style
-    linear-permutation construction (Broder 1997) over a base hash
-    both zlib and the JVM compute identically; "xxhash64" is the
-    all-JVM explode+agg form (32 string hashes per shingle);
-    "portable" is the same linear-permutation family over the
-    oracle-reproducible char-fold base so DuckDB can re-derive
-    signatures value-for-value (q67)."""
+    Both families compute the whole signature in one Arrow pass per doc
+    — no explode, no groupBy, no exchange (5M-doc rung: see
+    SCALING.md) — with the linear permutations hash_i(s) =
+    (a_i·base(s) + b_i) mod 2^31-1 (Broder 1997, datasketch-style).
+    "crc32perm" takes crc32 as the base, which zlib and the JVM compute
+    identically; "portable" takes the oracle-reproducible char fold so
+    DuckDB can re-derive signatures value-for-value (q67).  Both are
+    bit-identical to JVM explode+agg references (tests)."""
     # Zero-shingle docs are dropped with a NATIVE pre-filter, never by
     # filtering the UDF's output: Catalyst pushes a filter on a
     # UDF-computed column below the projection by DUPLICATING the
@@ -906,23 +921,10 @@ def _signature_from_sets(sets_: DataFrame, num_hashes: int,
     # TWICE per row (ops 10/13 in plans/r10/qb0_..._before.txt).
     # size(shset) > 0 is exactly the condition under which the UDFs
     # return a non-null signature, so output is identical.
-    if hash_family == "crc32perm":
-        sig_udf = _crcperm_sets_udf(num_hashes)
-        return (sets_.filter(F.size("shset") > 0)
-                .select("id", sig_udf(F.col("shset")).alias("signature")))
-    if hash_family == "portable":
-        # r10: fused single Arrow pass (VERDICT r9 #1) — no explode, no
-        # groupBy exchange, no per-shingle 193-term CASE polynomial;
-        # bit-identical to the JVM explode+agg reference (tests)
-        sig_udf = _portable_sets_udf(num_hashes)
-        return (sets_.filter(F.size("shset") > 0)
-                .select("id", sig_udf(F.col("shset")).alias("signature")))
-    sh = sets_.select("id", F.explode("shset").alias("sh"))
-    mins = [F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"h{i}")
-            for i in range(num_hashes)]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
-                      .alias("signature"))
+    sig_udf = (_crcperm_sets_udf if hash_family == "crc32perm"
+               else _portable_sets_udf)(num_hashes)
+    return (sets_.filter(F.size("shset") > 0)
+            .select("id", sig_udf(F.col("shset")).alias("signature")))
 
 
 def band_buckets(sig: DataFrame, bands: int, r: int,
@@ -931,9 +933,11 @@ def band_buckets(sig: DataFrame, bands: int, r: int,
     banding step, shared by the self-join path (minhash_lsh_pairs) and
     the incremental new-vs-index path (incremental.minhash_against).
 
-    xxhash64 family buckets on xxhash64(band, sig slice); the portable
-    family buckets on the raw r-value slice (array equality) so the
-    whole construction stays oracle-reproducible."""
+    The crc32perm family buckets on xxhash64(band, sig slice) — a
+    hashable bigint key; the portable family buckets on the raw r-value
+    slice (array equality) so the whole construction stays
+    oracle-reproducible."""
+    _check_hash_params(hash_family, _MINHASH_FAMILIES)
     # One-parse construction (VERDICT r9 #6, the q36 col_sql lesson):
     # the Column-API form of this banding (bands × (lit + r getItem +
     # hash) builder calls) cost ~0.16 s of synchronous py4j round trips
@@ -953,70 +957,28 @@ def band_buckets(sig: DataFrame, bands: int, r: int,
         "id", f"posexplode(array({', '.join(bexpr)})) AS (band, bucket)")
 
 
-def minhash_signature_rowwise(df: DataFrame, id_col: str,
-                              text_col: str = "text", k: int = 3,
-                              num_hashes: int = 32,
-                              hash_family: str = "crc32perm") -> DataFrame:
-    """Stateless per-row MinHash signature: no explode, no groupBy, no
-    shuffle, so it runs unchanged under Structured Streaming
-    (streaming.stream_minhash_against) and matches minhash_signature
-    bit-for-bit per family (differential-tested).  Docs with no
-    shingles are dropped, same as the aggregate form.
+def minhash_signature(df: DataFrame, id_col: str, text_col: str = "text",
+                      k: int = 3, num_hashes: int = 32,
+                      hash_family: str = "crc32perm") -> DataFrame:
+    """Per-doc MinHash signature; signature[i] = min over shingles of
+    hash_i(shingle).  Stateless per row — no aggregation, no shuffle —
+    so it runs unchanged under Structured Streaming
+    (streaming.stream_minhash_against).
 
-    "crc32perm" (default) IS the fused Arrow pass — already per-row,
-    the aggregate and rowwise forms match bit-for-bit.  "xxhash64"
-    keeps the r5 shape: array_min over per-shingle transform hashes
-    (interpreted HOF lambdas — wall-time parity with its aggregate
-    form at sf1, both bounded by the 32 string hashes per shingle).
-    The portable family stays on the aggregate path — its char-fold
-    hash is itself a higher-order fold, and nesting it inside
-    transform would leave codegen."""
+    hash_family="crc32perm" (default): the linear-permutation family
+    (a_i·crc32(s)+b_i mod 2^31-1), computed in ONE fused Arrow pass per
+    doc over byte-slice shingles — no shingle strings materialize; a
+    JVM expression twin + a from-sets Arrow form exist for bit-parity
+    testing. "portable": the same permutation family over the
+    char-fold base the DuckDB oracle can re-derive, so the whole
+    signature is value-checked (q67)."""
+    _check_hash_params(hash_family, _MINHASH_FAMILIES)
     if hash_family == "crc32perm":
-        from juliadb_jl_spark.functions.text import tokens
         sig_udf = _crcperm_fused_udf(k, num_hashes)
         # native token-count pre-filter == the UDF's null condition
         # (n_tokens < k); filtering the UDF output instead makes
         # Catalyst evaluate the UDF twice (guide §4.4, see
         # _signature_from_sets)
-        return (_spread(df)
-                .filter(F.size(tokens(F.col(text_col))) >= k)
-                .select(F.col(id_col).alias("id"),
-                        sig_udf(tokens(F.col(text_col)))
-                        .alias("signature")))
-    if hash_family != "xxhash64":
-        raise ValueError("rowwise signatures support hash_family "
-                         "'crc32perm' or 'xxhash64'")
-    sets_ = _shingle_sets(df, id_col, text_col, k)
-
-    def mk(i):
-        return F.array_min(
-            F.transform("shset", lambda s: F.xxhash64(F.lit(i), s)))
-    return (sets_.filter(F.size("shset") > 0)
-            .select("id", F.array(*[mk(i) for i in range(num_hashes)])
-                    .alias("signature")))
-
-
-def minhash_signature(df: DataFrame, id_col: str, text_col: str = "text",
-                      k: int = 3, num_hashes: int = 32,
-                      hash_family: str = "crc32perm") -> DataFrame:
-    """Per-doc MinHash signature; signature[i] = min over shingles of
-    hash_i(shingle).
-
-    hash_family="crc32perm" (default): the linear-permutation family
-    (a_i·crc32(s)+b_i mod 2^31-1), computed in ONE fused Arrow pass per
-    doc over byte-slice shingles — no shingle strings materialize, no
-    explode, no shuffle; a JVM expression twin + a from-sets Arrow form
-    exist for bit-parity testing. "xxhash64": hash_i(s) =
-    xxhash64(i, s) — all-JVM explode+agg, 32 string hashes per shingle
-    (the pre-r7 default; rung-measured slower than crc32perm, table in
-    SCALING.md). "portable": the same permutation family over the
-    char-fold base the DuckDB oracle can re-derive, so the whole
-    signature is value-checked (q67)."""
-    if hash_family == "crc32perm":
-        from juliadb_jl_spark.functions.text import tokens
-        sig_udf = _crcperm_fused_udf(k, num_hashes)
-        # native pre-filter, not a filter on the UDF output — see
-        # minhash_signature_rowwise (guide §4.4 duplication)
         return (_spread(df)
                 .filter(F.size(tokens(F.col(text_col))) >= k)
                 .select(F.col(id_col).alias("id"),
@@ -1040,10 +1002,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     the usual 1-(1-s^r)^b curve. Only bucket-mates are joined — at 100 TB
     the band shuffle replaces the quadratic comparison.
 
-    hash_family="portable" buckets on the raw r-value signature slice
-    (array equality) instead of xxhash64-of-slice, keeping the entire
-    pipeline oracle-reproducible (q69)."""
-    assert num_hashes % bands == 0
+    hash_family="crc32perm" (default) buckets on xxhash64 of each band's
+    signature slice; "portable" buckets on the raw r-value slice (array
+    equality), keeping the entire pipeline oracle-reproducible (q69)."""
+    _check_hash_params(hash_family, _MINHASH_FAMILIES, num_hashes, bands)
     # The unique-text lift that pays off 3× for ngram_jaccard_pairs was
     # measured 7× SLOWER here at UNIFORM 10-member clusters (42 s vs 6 s
     # at sf1, 90% dups): banded LSH is already ~linear in duplicate
@@ -1124,6 +1086,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text",
 
     hash_family="xxhash64" (default, 64-bit); "portable" uses the 31-bit
     oracle-reproducible hash (requires bits <= 31; q68)."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     tok = _spread(df).select(F.col(id_col).alias("id"),
                              F.explode(tokens(F.col(text_col))).alias("t"))
     if hash_family == "portable":
@@ -1175,6 +1138,7 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     on the estimated-max-cluster trigger (identical texts → identical
     simhash → intra hamming exactly 0, inter pairs carry the reps'
     hamming — output provably identical)."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     if unique_lift is None:
         unique_lift = _dup_stats(df, id_col, text_col)[1] >= 256
     if unique_lift:

@@ -54,8 +54,9 @@ from pyspark.sql import functions as F
 
 from juliadb_jl_spark.functions import scratch
 from juliadb_jl_spark.functions.dedup import (
-    _shingle_sets, _signature_from_sets, _window_fps, band_buckets,
-    cut_spans, hyperplane_bucket, merge_spans, verify_pairs_jaccard)
+    _MINHASH_FAMILIES, _check_hash_params, _shingle_sets,
+    _signature_from_sets, _window_fps, band_buckets, cut_spans,
+    hyperplane_bucket, merge_spans, verify_pairs_jaccard)
 from juliadb_jl_spark.functions.text import fingerprint
 
 
@@ -250,12 +251,21 @@ def check_index_family(index: DataFrame, hash_family: str,
     probe raises.  For metadata-less (pre-r8) flat indexes there is
     still one definitive check: crc32perm/portable signature values are
     (a·x+b) mod 2^31-1, so a sampled value outside [0, 2^31-1) proves
-    the index was built with hash_family='xxhash64' (full-range int64).
-    Pre-banded metadata-less indexes are uncheckable (both non-portable
-    families bucket via xxhash64-of-slice) — they pass silently."""
+    the index was built with the removed xxhash64 family (full-range
+    int64).  Either way, an xxhash64 index raises with a rebuild
+    message: no probe family can match it.  Pre-banded metadata-less
+    indexes hold only bucket hashes — they are uncheckable and pass
+    silently."""
     col = "bucket" if {"band", "bucket"}.issubset(index.columns) \
         else "signature"
     meta = _index_meta(index, col)
+    rebuild = ("Rebuild the index with minhash_index (signatures are "
+               "pure functions of the text).")
+    family = meta.get("hash_family")
+    if family is not None and family not in _MINHASH_FAMILIES:
+        raise ValueError(
+            f"this MinHash index was built with hash_family={family!r}, "
+            f"which no longer exists. {rebuild}")
     probe = {"hash_family": hash_family, "num_hashes": num_hashes,
              "bands": bands, "k": k}
     bad = {p: (meta[p], v) for p, v in probe.items()
@@ -269,8 +279,7 @@ def check_index_family(index: DataFrame, hash_family: str,
             f"mismatched probe joins ZERO buckets silently. Pass the "
             f"index's recorded parameters, or rebuild the index "
             f"(signatures are pure functions of the text).")
-    if not meta and col == "signature" and \
-            hash_family in ("crc32perm", "portable"):
+    if not meta and col == "signature":
         row = index.select("signature").head(1)
         if row and row[0][0] is not None and any(
                 v is not None and not (0 <= v < _P31) for v in row[0][0]):
@@ -278,9 +287,8 @@ def check_index_family(index: DataFrame, hash_family: str,
                 f"index signature values fall outside [0, 2^31-1), "
                 f"which is impossible under hash_family="
                 f"{hash_family!r} ((a*x+b) mod 2^31-1) — this index "
-                f"was built with hash_family='xxhash64' (the pre-r7 "
-                f"default). Pass hash_family='xxhash64' to probe it, "
-                f"or rebuild it under the current family.")
+                f"was built with the removed xxhash64 family (the "
+                f"pre-r7 default). {rebuild}")
 
 
 def _stamp_index_meta(df: DataFrame, col: str, **params) -> DataFrame:
@@ -298,14 +306,14 @@ def minhash_index_banded(index: DataFrame, id_col: str = "id",
     recognizes a pre-banded index by its columns and skips in-flight
     banding; band parameters must match the batch side (same
     num_hashes/bands/hash_family — document them next to the table).
-    xxhash64 family only: the portable family's bucket is an array,
+    crc32perm family only: the portable family's bucket is an array,
     which Spark bucketing cannot hash."""
+    _check_hash_params(hash_family, _MINHASH_FAMILIES, num_hashes, bands)
     if hash_family == "portable":
         raise ValueError("banded persistence needs a hashable bucket "
                          "column; the portable family's array buckets "
                          "are oracle-path only — use hash_family="
-                         "'xxhash64' (the scale path)")
-    assert num_hashes % bands == 0
+                         "'crc32perm' (the scale path)")
     check_index_family(index, hash_family, num_hashes)
     idx_id = id_col if id_col in index.columns else "id"
     banded = band_buckets(
@@ -432,8 +440,9 @@ def minhash_against(new_df: DataFrame, index: DataFrame, id_col: str,
     pre-r8 flat indexes get a one-row range check (crc32perm values
     are mod 2^31-1, xxhash64's are full-range int64). Indices
     persisted before the r7 crc32perm default change were built with
-    hash_family="xxhash64"; pass that explicitly to query them, or
-    rebuild (signatures are pure functions of the text).
+    the xxhash64 family, which is gone: they raise, and must be
+    rebuilt with ``minhash_index`` (signatures are pure functions of
+    the text).
 
     Giant-clique note: unlike minhash_lsh_pairs there is no unique-text
     lift here, because the documented composition already provides it —
@@ -442,7 +451,7 @@ def minhash_against(new_df: DataFrame, index: DataFrame, id_col: str,
     identical texts remain on either side and a c-clique can contribute
     at most c candidate rows per band, not c². check_invariants.py #6
     deliberately runs the NOT-deduped stress and stays exact."""
-    assert num_hashes % bands == 0
+    _check_hash_params(hash_family, _MINHASH_FAMILIES, num_hashes, bands)
     check_index_family(index, hash_family, num_hashes, bands, k)
     if verify and corpus_df is None:
         raise ValueError("verify=True needs corpus_df (id/text of the "

@@ -128,9 +128,9 @@ def stream_minhash_against(df: DataFrame, index: DataFrame, id_col: str,
                            num_hashes: int = 32, bands: int = 8,
                            hash_family: str = "crc32perm") -> DataFrame:
     """Streaming near-dup candidates vs the STATIC MinHash index: each
-    streamed doc gets a stateless per-row signature
-    (dedup.minhash_signature_rowwise — no aggregation, so it runs
-    under Structured Streaming), is banded, and stream-static
+    streamed doc gets its per-row signature (dedup.minhash_signature —
+    a per-row Arrow projection in both families, no aggregation, so it
+    runs under Structured Streaming), is banded, and stream-static
     equi-joined against the banded index.  Emits (id_new, id_corpus)
     candidate links; a pair sharing several bands repeats up to
     `bands` times — dedup/exact-verify downstream in batch (verify
@@ -139,19 +139,20 @@ def stream_minhash_against(df: DataFrame, index: DataFrame, id_col: str,
     how the batch-equivalence test checks it against
     incremental.minhash_against candidates.
 
-    ``hash_family`` (default crc32perm, ADVICE r7) must match the
+    ``hash_family`` ("crc32perm" default, or "portable") must match the
     index's build family — validated against the index's recorded
     column metadata by ``incremental.check_index_family`` (the static
-    side, so the check runs at plan time, not per micro-batch); pass
-    hash_family="xxhash64" to probe a pre-r7 index."""
+    side, so the check runs at plan time, not per micro-batch); an
+    index of the removed xxhash64 family raises and must be rebuilt."""
     from juliadb_jl_spark.functions.dedup import (
-        band_buckets, minhash_signature_rowwise)
+        _MINHASH_FAMILIES, _check_hash_params, band_buckets,
+        minhash_signature)
     from juliadb_jl_spark.functions.incremental import check_index_family
-    assert num_hashes % bands == 0
+    _check_hash_params(hash_family, _MINHASH_FAMILIES, num_hashes, bands)
     check_index_family(index, hash_family, num_hashes, bands, k)
     r = num_hashes // bands
-    sig = minhash_signature_rowwise(df, id_col, text_col, k, num_hashes,
-                                    hash_family)
+    sig = minhash_signature(df, id_col, text_col, k, num_hashes,
+                            hash_family)
     n = band_buckets(sig, bands, r, hash_family).alias("n")
     idx_id = id_col if id_col in index.columns else "id"
     c = band_buckets(index.select(F.col(idx_id).alias("id"), "signature"),

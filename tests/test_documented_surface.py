@@ -80,3 +80,29 @@ def test_documented_name_resolves(mod, name):
     assert _resolves(mod, name), (
         f"{mod}.{name} is referenced by API.md/COVERAGE.md but does not "
         f"resolve — was it deleted or renamed without updating the docs?")
+
+
+def test_surface_count_cli():
+    """`tools/surface_count.py` prints its docstring for -h/--help and
+    exits non-zero with a one-line usage error (no traceback) for a
+    module path that does not exist; a real count is one JSON line."""
+    import json
+    import subprocess
+    import sys
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, str(REPO / "tools" / "surface_count.py"),
+             *args], capture_output=True, text=True, timeout=60)
+
+    for flag in ("-h", "--help"):
+        r = run(flag)
+        assert r.returncode == 0 and r.stdout.startswith("Count the"), r
+    r = run("functions/no_such_module.py")
+    assert r.returncode != 0 and "Traceback" not in r.stderr
+    assert r.stderr.strip().startswith("usage:")
+    assert len(r.stderr.strip().splitlines()) == 1
+    r = run("functions/dedup.py")
+    out = json.loads(r.stdout)
+    assert r.returncode == 0 and out["functions/dedup.py"]["lines"] > 0
+    assert {"package_lines", "package_bytes", "public_knobs"} <= set(out)

@@ -5,6 +5,7 @@ cross-parity slice of the full self-join pipeline."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from juliadb_jl_spark.functions import dedup as DD
@@ -463,27 +464,6 @@ def test_clear_dup_stats(spark):
     assert not DD._DUP_STATS_MEMO
 
 
-def test_minhash_signature_rowwise_identical(spark):
-    """The stateless per-row signature form is bit-identical to the
-    explode+groupBy aggregate form on the real documents table — for
-    both the fused-Arrow default family and the all-JVM xxhash64 one."""
-    docs = read_table(spark, SF_DIR, "documents")
-    for fam in ("crc32perm", "xxhash64"):
-        a = DD.minhash_signature(docs, "doc_id", num_hashes=16,
-                                 hash_family=fam) \
-            .withColumnRenamed("signature", "sa")
-        b = DD.minhash_signature_rowwise(docs, "doc_id", num_hashes=16,
-                                         hash_family=fam) \
-            .withColumnRenamed("signature", "sb")
-        j = a.join(b, "id", "full")
-        assert j.filter(F.col("sa").isNull() | F.col("sb").isNull() |
-                        (F.col("sa") != F.col("sb"))).count() == 0, fam
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        DD.minhash_signature_rowwise(docs, "doc_id",
-                                     hash_family="portable")
-
-
 def test_minhash_crcperm_three_way_parity(spark):
     """The crc32perm signature's THREE implementations must be
     BIT-identical: the fused tokens→byte-slice-shingles→signature
@@ -513,20 +493,23 @@ def test_minhash_crcperm_three_way_parity(spark):
                for s in fused.values() for v in s)
 
 
-def test_stream_minhash_against_matches_batch(spark, tmp_path):
+@pytest.mark.parametrize("fam", ["crc32perm", "portable"])
+def test_stream_minhash_against_matches_batch(spark, tmp_path, fam):
     """Streaming near-dup flagging: per-row signatures + banding +
     stream-static join across micro-batches produce exactly the batch
-    candidate set (distinct pairs == minhash_against verify=False)."""
+    candidate set (distinct pairs == minhash_against verify=False), in
+    both MinHash families."""
     from juliadb_jl_spark.functions import incremental as INC
     from juliadb_jl_spark.streaming import aggregate as SA
 
     docs = read_table(spark, SF_DIR, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = INC.minhash_index(old, "doc_id", num_hashes=16)
+    idx = INC.minhash_index(old, "doc_id", num_hashes=16, hash_family=fam)
     want = {tuple(r) for r in
             INC.minhash_against(new, idx, "doc_id", num_hashes=16,
-                                bands=8, verify=False).collect()}
+                                bands=8, verify=False,
+                                hash_family=fam).collect()}
     src = str(tmp_path / "mh_stream")
     halves = new.randomSplit([0.5, 0.5], seed=3)
     for i, h in enumerate(halves):
@@ -534,14 +517,14 @@ def test_stream_minhash_against_matches_batch(spark, tmp_path):
     stream = (spark.readStream.schema(new.schema)
               .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
     out = SA.stream_minhash_against(stream, idx, "doc_id", num_hashes=16,
-                                    bands=8)
+                                    bands=8, hash_family=fam)
     q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("mh_out").start())
+         .queryName(f"mh_out_{fam}").start())
     q.processAllAvailable()
     q.stop()
     got = {(r["id_new"], r["id_corpus"]) for r in
-           spark.sql("SELECT DISTINCT * FROM mh_out").collect()}
-    assert got == want
+           spark.sql(f"SELECT DISTINCT * FROM mh_out_{fam}").collect()}
+    assert got == want and got
 
 
 def test_incremental_plan_shapes(spark):
@@ -612,9 +595,11 @@ def test_index_family_metadata_validation(spark, tmp_path):
     family / parameters used to join ZERO buckets silently. Indexes now
     carry their build parameters as column metadata (surviving parquet
     persistence) and check_index_family raises on disagreement; a
-    metadata-less pre-r8 xxhash64 index probed as crc32perm is caught
+    metadata-less pre-r8 index of the removed xxhash64 family is caught
     by the signature value-range heuristic (crc32perm values are
-    mod 2^31-1, xxhash64's are full-range int64)."""
+    mod 2^31-1, xxhash64's are full-range int64), and an index that
+    records hash_family="xxhash64" raises too — both with a rebuild
+    message, since no probe family can read them."""
     import pytest
 
     import juliadb_jl_spark as jdb
@@ -625,10 +610,10 @@ def test_index_family_metadata_validation(spark, tmp_path):
     meta = dict(idx.schema["signature"].metadata)
     assert meta == {"hash_family": "crc32perm", "num_hashes": 16, "k": 3}
 
-    # family mismatch raises (both directions of the r7 default flip)
-    with pytest.raises(ValueError, match="hash_family"):
+    # family mismatch raises
+    with pytest.raises(ValueError, match="hash_family: index"):
         INC.minhash_against(new, idx, "doc_id", num_hashes=16, bands=8,
-                            verify=False, hash_family="xxhash64")
+                            verify=False, hash_family="portable")
     # parameter mismatch raises
     with pytest.raises(ValueError, match="num_hashes"):
         INC.minhash_against(new, idx, "doc_id", num_hashes=32, bands=8,
@@ -642,9 +627,9 @@ def test_index_family_metadata_validation(spark, tmp_path):
     jdb.save(jdb.table(idx), str(tmp_path / "mh_idx_meta"))
     idx2 = jdb.load(str(tmp_path / "mh_idx_meta"), spark).df
     assert dict(idx2.schema["signature"].metadata) == meta
-    with pytest.raises(ValueError, match="hash_family"):
+    with pytest.raises(ValueError, match="hash_family: index"):
         INC.minhash_against(new, idx2, "doc_id", num_hashes=16, bands=8,
-                            verify=False, hash_family="xxhash64")
+                            verify=False, hash_family="portable")
 
     # the banded form validates its input and stamps bucket metadata
     with pytest.raises(ValueError, match="num_hashes"):
@@ -659,54 +644,88 @@ def test_index_family_metadata_validation(spark, tmp_path):
 
     # the streaming probe validates too (static index side, plan time)
     from juliadb_jl_spark.streaming import aggregate as SA
-    with pytest.raises(ValueError, match="hash_family"):
+    with pytest.raises(ValueError, match="hash_family: index"):
         SA.stream_minhash_against(new, idx, "doc_id", num_hashes=16,
-                                  bands=8, hash_family="xxhash64")
+                                  bands=8, hash_family="portable")
 
     # pre-r8 metadata-less index built under the old xxhash64 default:
-    # probing as crc32perm is caught by the value-range heuristic
-    legacy = DD.minhash_signature(old, "doc_id", num_hashes=16,
-                                  hash_family="xxhash64")
-    assert legacy.schema["signature"].metadata in ({}, None) or \
-        not dict(legacy.schema["signature"].metadata)
-    with pytest.raises(ValueError, match="xxhash64"):
-        INC.minhash_against(new, legacy, "doc_id", num_hashes=16,
+    # probing it is caught by the value-range heuristic, with a rebuild
+    # message (no probe family can read it)
+    from tests.test_property import signature_xxhash64_expr
+    legacy = signature_xxhash64_expr(
+        DD._shingle_sets(old, "doc_id", "text", 3), 16)
+    assert not dict(legacy.schema["signature"].metadata or {})
+    for probe in (lambda: INC.minhash_against(
+                      new, legacy, "doc_id", num_hashes=16, bands=8,
+                      verify=False),
+                  lambda: SA.stream_minhash_against(
+                      new, legacy, "doc_id", num_hashes=16, bands=8),
+                  lambda: INC.minhash_index_banded(legacy, num_hashes=16,
+                                                   bands=8)):
+        with pytest.raises(ValueError, match="Rebuild the index") as e:
+            probe()
+        assert "xxhash64" in str(e.value)
+        assert "Pass hash_family" not in str(e.value)
+    # ...and so does an index whose metadata records the xxhash64 family
+    tagged = legacy.withMetadata("signature", {
+        "hash_family": "xxhash64", "num_hashes": 16, "k": 3})
+    with pytest.raises(ValueError, match="Rebuild the index") as e:
+        INC.minhash_against(new, tagged, "doc_id", num_hashes=16,
                             bands=8, verify=False)
-    # ...and probing it with the CORRECT family still works
-    assert INC.minhash_against(new, legacy, "doc_id", num_hashes=16,
-                               bands=8, verify=False,
-                               hash_family="xxhash64").count() >= 0
+    assert "'xxhash64'" in str(e.value)
+    assert "Pass hash_family" not in str(e.value)
 
 
-def test_stream_minhash_against_xxhash64_family(spark, tmp_path):
-    """ADVICE r7 (low): the streaming probe now takes hash_family, so
-    pre-r7 xxhash64 indexes remain queryable from streams — candidates
-    match the batch path under the same family."""
-    from juliadb_jl_spark.functions import incremental as INC
+def test_unknown_hash_family_and_bad_band_split_rejected(spark):
+    """An unknown hash family raises ValueError at every MinHash and
+    SimHash entry point — a typo such as "crc32" used to fall through
+    to the xxhash64 branches and return their signatures — and so does
+    a band split that does not divide num_hashes or has bands < 1
+    (formerly a bare assert, stripped under ``python -O``, and a
+    ZeroDivisionError for bands=0).  Every check runs before a job."""
     from juliadb_jl_spark.streaming import aggregate as SA
 
-    docs = read_table(spark, SF_DIR, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = DD.minhash_signature(old, "doc_id", num_hashes=16,
-                               hash_family="xxhash64")
-    want = {tuple(r) for r in
-            INC.minhash_against(new, idx, "doc_id", num_hashes=16,
-                                bands=8, verify=False,
-                                hash_family="xxhash64").collect()}
-    src = str(tmp_path / "mh_stream_xx")
-    new.coalesce(1).write.parquet(f"{src}/b0")
-    stream = (spark.readStream.schema(new.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    out = SA.stream_minhash_against(stream, idx, "doc_id", num_hashes=16,
-                                    bands=8, hash_family="xxhash64")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("mh_out_xx").start())
-    q.processAllAvailable()
-    q.stop()
-    got = {(r["id_new"], r["id_corpus"]) for r in
-           spark.sql("SELECT DISTINCT * FROM mh_out_xx").collect()}
-    assert got == want and got
+    docs = _docs(spark, OLD_ROWS)
+    idx = INC.minhash_index(docs, "doc_id", num_hashes=16)
+    sig = spark.createDataFrame([(1, [0] * 16)],
+                                "id long, signature array<long>")
+    minhash_calls = [
+        lambda fam: DD.minhash_signature(docs, "doc_id", hash_family=fam),
+        lambda fam: DD.minhash_lsh_pairs(docs, "doc_id", hash_family=fam),
+        lambda fam: DD.band_buckets(sig, 8, 2, hash_family=fam),
+        lambda fam: INC.minhash_index(docs, "doc_id", hash_family=fam),
+        lambda fam: INC.minhash_index_banded(idx, num_hashes=16,
+                                             hash_family=fam),
+        lambda fam: INC.minhash_against(docs, idx, "doc_id",
+                                        num_hashes=16, verify=False,
+                                        hash_family=fam),
+        lambda fam: SA.stream_minhash_against(docs, idx, "doc_id",
+                                              num_hashes=16,
+                                              hash_family=fam),
+    ]
+    for call in minhash_calls:
+        for fam in ("crc32", "xxhash64", "CRC32PERM"):
+            with pytest.raises(ValueError, match="hash_family must be"):
+                call(fam)
+    for call in (lambda: DD.simhash(docs, "doc_id", hash_family="crc32"),
+                 lambda: DD.simhash_pairs(docs, "doc_id",
+                                          hash_family="crc32perm")):
+        with pytest.raises(ValueError, match="hash_family must be"):
+            call()
+
+    split_calls = [
+        lambda b: DD.minhash_lsh_pairs(docs, "doc_id", num_hashes=16,
+                                       bands=b),
+        lambda b: INC.minhash_index_banded(idx, num_hashes=16, bands=b),
+        lambda b: INC.minhash_against(docs, idx, "doc_id", num_hashes=16,
+                                      bands=b, verify=False),
+        lambda b: SA.stream_minhash_against(docs, idx, "doc_id",
+                                            num_hashes=16, bands=b),
+    ]
+    for call in split_calls:
+        for bands in (0, -2, 3):
+            with pytest.raises(ValueError, match="bands must be"):
+                call(bands)
 
 
 def test_dedup_exact_against_keys_only_matches_full(spark):

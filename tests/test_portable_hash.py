@@ -1,9 +1,9 @@
 """Portable (oracle-reproducible) hash family: Spark ≡ DuckDB bit parity,
 and the portable MinHash/SimHash paths agree with their exact baselines.
 
-The xxhash64 family stays the 100-TB default; the portable family exists
-so the SAME MinHash/SimHash pipelines are value-checkable end-to-end
-(driver queries q67-q69)."""
+crc32perm (MinHash) and xxhash64 (SimHash) stay the 100-TB defaults; the
+portable family exists so the SAME MinHash/SimHash pipelines are
+value-checkable end-to-end (driver queries q67-q69)."""
 
 from __future__ import annotations
 

@@ -457,6 +457,20 @@ def signature_crcperm_expr(sets_, num_hashes):
                     .alias("signature")))
 
 
+def signature_xxhash64_expr(sets_, num_hashes):
+    """The removed pre-r7 xxhash64 MinHash family: explode + one
+    `min(xxhash64(i, shingle))` aggregation per hash.  Kept only to
+    build a metadata-less legacy index for the rebuild-error test."""
+    from pyspark.sql import functions as F
+
+    sh = sets_.select("id", F.explode("shset").alias("sh"))
+    mins = [F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"h{i}")
+            for i in range(num_hashes)]
+    return (sh.groupBy("id").agg(*mins)
+            .select("id", F.array(*[f"h{i}" for i in range(num_hashes)])
+                    .alias("signature")))
+
+
 @given(rows=nasty_docs())
 @settings(max_examples=6, deadline=None,
           suppress_health_check=list(HealthCheck))

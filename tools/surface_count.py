@@ -64,8 +64,16 @@ def count(root: str, modules: list[str]) -> dict:
 
 def main() -> None:
     args = sys.argv[1:]
+    if args and args[0] in ("-h", "--help"):
+        print(__doc__.strip())
+        return
     root = args.pop(0) if args and os.path.isdir(args[0]) else \
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for m in args:
+        if not os.path.isfile(os.path.join(root, "juliadb_jl_spark", m)):
+            sys.exit(f"usage: surface_count.py [checkout_root] "
+                     f"[module_path ...]: no module {m!r} under "
+                     f"{os.path.join(root, 'juliadb_jl_spark')}")
     print(json.dumps(count(root, args)))
 
 
