@@ -32,7 +32,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from juliadb_jl_spark.functions.dedup import portable_hash
+from juliadb_jl_spark.functions.dedup import (_SIMHASH_FAMILIES,
+                                              _check_hash_params,
+                                              portable_hash)
 from juliadb_jl_spark.functions.text import tokens
 
 
@@ -52,6 +54,7 @@ def hashed_features(col: Column, dim: int = 256, lowercase: bool = True,
     does); for one-shot scoring prefer `margin_expr`, which folds with
     the hash inline — the materialize-then-fold nesting compiles a
     pathological codegen method (measured 26 s first-run vs 2 s)."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     toks = tokens(F.lower(col) if lowercase else col)
     return F.transform(toks, lambda w: _feat_hash(w, dim, hash_family))
 
@@ -66,6 +69,7 @@ def margin_expr(col: Column, weights, bias: float, lowercase: bool = True,
     alone for tokenless docs. ONE fold over the token array with the
     hash inline — no intermediate feature array, no nested-HOF codegen
     cliff (13× faster cold than materialize-then-fold at sf0.1)."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     toks = tokens(F.lower(col) if lowercase else col)
     warr = _weights_array(weights)
     dim = len(weights)
@@ -80,6 +84,7 @@ def margin_expr(col: Column, weights, bias: float, lowercase: bool = True,
 def score_expr(col: Column, weights, bias: float, lowercase: bool = True,
                hash_family: str = "xxhash64") -> Column:
     """sigmoid(margin) as a native Column."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     m = margin_expr(col, weights, bias, lowercase=lowercase,
                     hash_family=hash_family)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
@@ -105,6 +110,7 @@ def train_logreg(df: DataFrame, label_col: str, text_col: str = "text",
     update). Deterministic up to float summation order (~1e-15); the
     gradient math is verified against a local numpy reference in
     tests/test_classifier.py."""
+    _check_hash_params(hash_family, _SIMHASH_FAMILIES)
     fe = df.select(
         F.col(label_col).cast("double").alias("__y"),
         hashed_features(F.col(text_col), dim=dim,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from juliadb_jl_spark.functions import _kernels as K
 from juliadb_jl_spark.functions.sampling import hash_unit
 from juliadb_jl_spark.functions.text import (arrow_shingles,
                                              shingles)
@@ -271,8 +272,7 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
 
 
 def novelty_scores(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", n: int = 5,
-                   method: str = "hashed") -> DataFrame:
+                   text_col: str = "text", n: int = 5) -> DataFrame:
     """Per-document n-gram novelty against the rest of the corpus: the
     fraction of a doc's DISTINCT word n-grams that appear in no other
     document. Low novelty flags boilerplate/templated/memorized text
@@ -285,92 +285,58 @@ def novelty_scores(df: DataFrame, id_col: str = "doc_id",
 
     Scale: this is the engine's one corpus-vs-ITSELF gram op, so
     unlike contamination/split-leakage nothing broadcasts — the gram
-    stream itself must aggregate. Since r7 it aggregates ONCE: the
+    stream itself must aggregate, and it aggregates ONCE: the
     (key → df, min(id)) aggregation both counts document frequency and
     names the sole owner of every df=1 gram, so
-    n_shared = n_grams − n_unique(owner) and the former join back onto
-    the gram stream (a second full gram exchange + sort-merge) is gone;
-    per-doc n_grams rides the scan directly. Two r6 rules keep the
-    aggregation alive at the 5M-doc rung (both failures observed there
-    as AGGREGATE_OUT_OF_MEMORY before the fix):
+    n_shared = n_grams − n_unique(owner); per-doc n_grams rides the
+    scan directly.
 
-    - Gram TEXT is never BUILT at all (r8): the 128-bit key (two
-      independent polynomial lanes over a 64-bit per-token crc base —
-      `text._gram_lanes_flat`, the crc32perm-minhash lesson applied to
-      gram keys) is computed inside the fused Arrow pass and per-doc
-      deduped there, so what crosses Arrow and the frequency exchange
-      is 16 bytes per distinct gram — no gram strings through Arrow
-      (the r7 shape), no JVM array_distinct/explode/xxhash64 chain.
-      Collision odds match the 2×xxhash64 contract it replaces
-      (~10^-20 at 10^9 grams — the md5-fingerprint exactness class);
-      the per-doc n_grams divisor is a twin fused pass counting
-      distinct (h1, h2) pairs, consistent by construction with the
-      key stream. ``method="exact"`` keys the same plan shape on the
-      gram TEXT instead (string keys via arrow_shingles — the
-      differential-testing escape hatch for the probabilistic
-      contract, ADVICE r6).
+    - Gram text is never built: the 128-bit key (`_kernels.gram_keys`,
+      two polynomial lanes over a 64-bit per-token crc base) is computed
+      and per-doc deduped inside one Arrow pass, so 16 bytes per
+      distinct gram cross Arrow and the frequency exchange (collision
+      odds ~10^-20 at 10^9 grams). The n_grams divisor counts the same
+      distinct (h1, h2) pairs. The string-keyed form is the test
+      reference (tests/test_curation.py).
     - The frequency count pre-partitions BY THE KEY onto
-      4×parallelism partitions and aggregates within them (for a
-      high-entropy corpus the map-side partial agg combines nothing
-      anyway — it just builds a per-task hash map of nearly all
-      distinct grams, which is what blew up); each task's map is then
-      bounded by distinct_grams/partitions regardless of input
-      layout. Nothing is persisted: rebuilding grams is cheap since
-      the build is the fused Arrow pass."""
+      4×parallelism partitions, so each task's aggregation map is
+      bounded by distinct_grams/partitions (the map-side partial agg
+      of a high-entropy gram stream combines nothing and ran out of
+      memory at the 5M-doc rung)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
     from juliadb_jl_spark.functions.dedup import _spread
-    from juliadb_jl_spark.functions.text import (_doc_unique_pairs,
-                                                 _gram_lanes_flat,
-                                                 distinct_gram_count_udf,
+    from juliadb_jl_spark.functions.text import (distinct_gram_count_udf,
                                                  tokens)
     p = df.sparkSession.sparkContext.defaultParallelism
     sp = _spread(df)
-    if method == "hashed":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-        nn_ = n
-        id_t = df.schema[id_col].dataType
-        key_schema = T.StructType([
-            T.StructField("__id", id_t),
-            T.StructField("__h1", T.LongType()),
-            T.StructField("__h2", T.LongType())])
+    key_schema = T.StructType([
+        T.StructField("__id", df.schema[id_col].dataType),
+        T.StructField("__h1", T.LongType()),
+        T.StructField("__h2", T.LongType())])
 
-        def _emit_keys(it):
-            # per-doc DISTINCT (h1, h2) gram keys, exploded to rows
-            # HERE — nothing but 16-byte keys crosses Arrow; gramless
-            # docs emit nothing (the per_doc left join keeps them)
-            for pdf in it:
-                h1, h2, counts = _gram_lanes_flat(pdf["__toks"], nn_)
-                u1s, u2s, ulens = [], [], []
-                for u1, u2 in _doc_unique_pairs(h1, h2, counts):
-                    u1s.append(u1)
-                    u2s.append(u2)
-                    ulens.append(len(u1))
-                if not u1s or not sum(ulens):
-                    continue
-                yield pd.DataFrame(
-                    {"__id": np.repeat(pdf["__id"].values, ulens),
-                     "__h1": np.concatenate(u1s).view(np.int64),
-                     "__h2": np.concatenate(u2s).view(np.int64)})
+    def _emit_keys(it):
+        # per-doc DISTINCT (h1, h2) gram keys, exploded to rows HERE —
+        # nothing but 16-byte keys crosses Arrow; gramless docs emit
+        # nothing (the per_doc left join keeps them)
+        for rb in it:
+            nwin, _, h1, h2 = K.gram_keys(K.tokens_of(rb.column(1)), n)
+            doc, h1, h2 = K.doc_unique(K.row_index(nwin), h1, h2)
+            if len(doc):
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0).take(pa.array(doc)),
+                     pa.array(h1.view(np.int64)), pa.array(h2.view(np.int64))],
+                    names=key_schema.fieldNames())
 
-        grams = (sp.select(F.col(id_col).alias("__id"),
-                           tokens(F.col(text_col)).alias("__toks"))
-                 .mapInPandas(_emit_keys, key_schema)
-                 .withColumnRenamed("__id", id_col))
-        knames = ["__h1", "__h2"]
-        per_doc = sp.select(
-            F.col(id_col),
-            distinct_gram_count_udf(n)(tokens(F.col(text_col)))
-            .alias("n_grams"))
-    elif method == "exact":
-        arr = F.array_distinct(arrow_shingles(F.col(text_col), n))
-        grams = sp.select(F.col(id_col), F.explode(arr).alias("__g"))
-        knames = ["__g"]
-        per_doc = sp.select(F.col(id_col),
-                            F.size(arr).cast("long").alias("n_grams"))
-    else:
-        raise ValueError(f"method must be 'hashed' or 'exact' "
-                         f"(got {method!r})")
+    grams = (sp.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+             .mapInArrow(_emit_keys, key_schema)
+             .withColumnRenamed("__id", id_col))
+    knames = ["__h1", "__h2"]
+    per_doc = sp.select(
+        F.col(id_col),
+        distinct_gram_count_udf(n)(tokens(F.col(text_col))).alias("n_grams"))
     # n_shared = n_grams − n_unique: a gram with document frequency 1
     # has exactly ONE owning document, and the same (key → count,
     # min(id)) aggregation that computes df also names that owner — so
@@ -850,19 +816,6 @@ _BROADCAST_MAX_CHARS = 32 * 1024 * 1024
 _FUSED_MAX_EVAL_GRAMS = 1 << 20
 
 
-def _doc_gram_offsets(ts: list, n: int):
-    """(joined_text, char offsets): gram i of a token list is
-    js[off[i]:off[i+n]-1] — exactly ' '.join(ts[i:i+n]), bit-identical
-    to shingles()/arrow_shingles (empty tokens preserved)."""
-    js = " ".join(ts)
-    off = [0] * (len(ts) + 1)
-    p = 0
-    for j, t in enumerate(ts):
-        p += len(t) + 1
-        off[j + 1] = p
-    return js, off
-
-
 def split_leakage(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", split_col: str = "split",
                   train: str = "train", n: int = 5) -> DataFrame:
@@ -997,18 +950,24 @@ def _split_leakage(df: DataFrame, id_col: str, text_col: str,
 def _fused_leakage(df, id_col, text_col, split_col, n, ev, tr,
                    ev_parts, tr_parts):
     """split_leakage's fused tier, or None when the eval gram keys
-    overflow `_FUSED_MAX_EVAL_GRAMS`. Keys are `text._gram_lanes_flat`'s
-    128-bit lanes: no gram string is built, per-row dedup is a
-    bytes-view np.unique and the train-side test is numpy."""
+    overflow `_FUSED_MAX_EVAL_GRAMS`. Keys are `_kernels.gram_keys`'
+    128-bit lanes, deduped per row in the Arrow pass; the train-side
+    test is `_kernels.candidate_hits`."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    from juliadb_jl_spark.functions.text import (_doc_unique_pairs,
-                                                 _gram_lanes_flat, tokens)
+    from juliadb_jl_spark.functions.text import tokens
     # The per-task cap bounds the transient driver collect on the
     # overflow path; a skew-induced false overflow only costs speed.
     cap = max(_FUSED_MAX_EVAL_GRAMS // ev_parts, 50_000)
+    ev_schema = T.StructType([
+        T.StructField("__id", df.schema[id_col].dataType),
+        T.StructField("__split", df.schema[split_col].dataType),
+        T.StructField("__h1", T.LongType()),
+        T.StructField("__h2", T.LongType()),
+        T.StructField("__m", T.IntegerType())])
 
     def _eval_doc_grams(it):
         # Job 1: one row per (eval row, distinct gram key). The long
@@ -1017,35 +976,32 @@ def _fused_leakage(df, id_col, text_col, split_col, n, ev, tr,
         # zero-gram row rides an __m=0 marker and overflow an __m=-1
         # sentinel.
         emitted = 0
-        for pdf in it:
-            h1a, h2a, counts = _gram_lanes_flat(pdf["__toks"], n)
-            ids, sps, g1, g2, ms = [], [], [], [], []
-            for di, sp_, (u1, u2) in zip(
-                    pdf["__id"], pdf["__split"],
-                    _doc_unique_pairs(h1a, h2a, counts)):
-                emitted += len(u1)
-                if emitted > cap:
-                    yield pd.DataFrame({"__id": [di], "__split": [sp_],
-                                        "__h1": 0, "__h2": 0, "__m": -1})
-                    return
-                k = max(len(u1), 1)
-                ids += [di] * k
-                sps += [sp_] * k
-                g1 += u1.view(np.int64).tolist() or [0]
-                g2 += u2.view(np.int64).tolist() or [0]
-                ms += [1] * len(u1) or [0]
-            yield pd.DataFrame({"__id": ids, "__split": sps,
-                                "__h1": g1, "__h2": g2, "__m": ms})
+        for rb in it:
+            nwin, _, h1, h2 = K.gram_keys(K.tokens_of(rb.column(2)), n)
+            doc, h1, h2 = K.doc_unique(K.row_index(nwin), h1, h2)
+            emitted += len(doc)
+            if emitted > cap:
+                doc, h1, h2 = doc[:1], h1[:0], h2[:0]
+                m = np.full(1, -1, dtype=np.int32)
+            else:
+                empty = np.flatnonzero(
+                    np.bincount(doc, minlength=rb.num_rows) == 0)
+                doc = np.concatenate([doc, empty])
+                m = (np.arange(len(doc)) < len(h1)).astype(np.int32)
+            pad = np.zeros(len(doc) - len(h1), dtype=np.uint64)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).take(pa.array(doc)),
+                 rb.column(1).take(pa.array(doc)),
+                 pa.array(np.concatenate([h1, pad]).view(np.int64)),
+                 pa.array(np.concatenate([h2, pad]).view(np.int64)),
+                 pa.array(m)], names=ev_schema.fieldNames())
+            if emitted > cap:
+                return
 
     ev_pdf = ev.select(
         F.col(id_col).alias("__id"), F.col(split_col).alias("__split"),
-        tokens(F.col(text_col)).alias("__toks")).mapInPandas(
-        _eval_doc_grams, T.StructType([
-            T.StructField("__id", df.schema[id_col].dataType),
-            T.StructField("__split", df.schema[split_col].dataType),
-            T.StructField("__h1", T.LongType()),
-            T.StructField("__h2", T.LongType()),
-            T.StructField("__m", T.IntegerType())])).toPandas()
+        tokens(F.col(text_col)).alias("__toks")).mapInArrow(
+        _eval_doc_grams, ev_schema).toPandas()
     if (ev_pdf["__m"] == -1).any() or len(ev_pdf) > _FUSED_MAX_EVAL_GRAMS:
         return None
     # per-(id, split) key LISTS, not sets: each row adds its own distinct
@@ -1061,28 +1017,20 @@ def _fused_leakage(df, id_col, text_col, split_col, n, ev, tr,
         frozenset(se)))
 
     def _matched(it):
-        # Job 2: np.isin on the h1 lane is the coarse cut, the exact
-        # (h1, h2) pair set confirms; only candidate keys (task-deduped,
-        # ⊆ S_e) cross the Arrow boundary.
-        s1_cand, pair_set = bc_se.value
-        emitted: set = set()
-        for pdf in it:
-            h1a, h2a, _ = _gram_lanes_flat(pdf["__toks"], n)
-            s1, s2 = h1a.view(np.int64), h2a.view(np.int64)
-            o1, o2 = [], []
-            for i in np.nonzero(np.isin(s1, s1_cand))[0]:
-                key = (int(s1[i]), int(s2[i]))
-                if key in pair_set and key not in emitted:
-                    emitted.add(key)
-                    o1.append(key[0])
-                    o2.append(key[1])
-            if o1:
-                yield pd.DataFrame(
-                    {"__h1": np.array(o1, dtype=np.int64),
-                     "__h2": np.array(o2, dtype=np.int64)})
+        # Job 2: only candidate keys (task-deduped, ⊆ S_e) cross the
+        # Arrow boundary.
+        cand, seen = bc_se.value, set()
+        for rb in it:
+            _, _, h1, h2 = K.gram_keys(K.tokens_of(rb.column(0)), n)
+            s1, s2 = h1.view(np.int64), h2.view(np.int64)
+            sel = K.candidate_hits(s1, s2, cand, seen)
+            if len(sel):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(s1[sel]), pa.array(s2[sel])],
+                    names=["__h1", "__h2"])
 
     m = tr.select(tokens(F.col(text_col)).alias("__toks")) \
-        .mapInPandas(_matched, "__h1 long, __h2 long")
+        .mapInArrow(_matched, "__h1 long, __h2 long")
     # per-task dedup is global only for a single-task train side;
     # otherwise dedup JVM-side, bounding the collect by |S_e|
     hits = (m.distinct() if tr_parts > 1 else m).toPandas()

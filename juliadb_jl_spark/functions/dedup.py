@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from juliadb_jl_spark.functions import _kernels as K
 from juliadb_jl_spark.functions import scratch
 from juliadb_jl_spark.functions.text import (arrow_shingles, fingerprint,
                                              shingles, tokens)
@@ -664,136 +665,28 @@ def _check_hash_params(hash_family: str, families: tuple[str, ...],
                          f"(got num_hashes={num_hashes}, bands={bands})")
 
 
-def _sig_mins(hb, lens, num_hashes: int, a_, b_):
-    """Batch core of the crc32perm signature: segmented per-doc minima
-    of (a_i·hb + b_i) mod 2^31-1 over the flat base-hash array.  Each
-    permutation is ONE numpy pass + `np.minimum.reduceat` — the temp
-    stays one flat array, never a (num_hashes × N) matrix, so Arrow
-    batch size bounds memory.  hb < 2^32 and a_i < 2^31, so the
-    product stays under 2^63 (no int64 overflow on either side of the
-    JVM-parity contract).  Returns a list aligned with `lens`, None
-    for zero-shingle docs (the aggregate form drops them)."""
-    import numpy as np
-    nz = np.array([n for n in lens if n > 0], dtype=np.int64)
-    starts = np.zeros(len(nz), dtype=np.int64)
-    np.cumsum(nz[:-1], out=starts[1:])
-    sig = np.empty((len(nz), num_hashes), dtype=np.int64)
-    for i in range(num_hashes):
-        v = (a_[i] * hb + b_[i]) % _P31
-        sig[:, i] = np.minimum.reduceat(v, starts)
-    out, j = [], 0
-    for n in lens:
-        if n > 0:
-            out.append(sig[j].tolist())
-            j += 1
-        else:
-            out.append(None)
-    return out
+def _crcperm_from_sets(col, num_hashes: int):
+    """crc32perm MinHash signature of each row's shingle set: zlib.crc32
+    over the shingle's UTF-8 bytes (bit-identical to the JVM's
+    java.util.zip.CRC32 behind `F.crc32`), then the permutation minima.
+    NULL for a NULL or empty set."""
+    data, off = K.string_parts(col.flatten())
+    hb = K.crc_slices(data, off[:-1], off[1:])
+    return K.min_signature(hb, K.list_lengths(col),
+                           *perm_constants(num_hashes))
 
 
-def _crcperm_sets_udf(num_hashes: int):
-    # session-keyed wrapper memo — see text._memo_udf (r10)
-    from juliadb_jl_spark.functions.text import _memo_udf
-    return _memo_udf(("crcperm_sets", num_hashes),
-                     lambda: _crcperm_sets_udf_build(num_hashes))
-
-
-def _crcperm_sets_udf_build(num_hashes: int):
-    """Per-doc crc32perm MinHash signature from an (id, shset) frame:
-    ONE Arrow pass — no explode, no groupBy, ZERO exchanges.  The base
-    hash is zlib.crc32 over the shingle's UTF-8 bytes — C-speed per
-    call (~0.1 µs vs ~2 µs for a hashlib md5 round trip, the measured
-    difference between losing and beating the all-JVM form at the 5M
-    rung) and bit-identical to the JVM's java.util.zip.CRC32 behind
-    `F.crc32` (same CRC-32/ISO-HDLC polynomial).  Stateless and
-    deterministic, so it runs unchanged under Structured Streaming."""
-    import numpy as np
-    import pandas as pd
-    from zlib import crc32 as _crc
-    from pyspark.sql.functions import pandas_udf
-    a_, b_ = perm_constants(num_hashes)
-
-    def _sig_fn(col):
-        lens, flat = [], []
-        for s in col:
-            if s is None:
-                lens.append(0)
-                continue
-            lens.append(len(s))
-            flat.extend(s)
-        if not flat:
-            return pd.Series([None] * len(col))
-        hb = np.fromiter(
-            (_crc(x.encode("utf-8", "surrogatepass")) for x in flat),
-            dtype=np.int64, count=len(flat))
-        return pd.Series(_sig_mins(hb, lens, num_hashes, a_, b_))
-
-    _sig_fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # optimizer fence (guide §4.4): a downstream posexplode(signature)
-    # infers size/isnotnull filters that would re-evaluate the whole
-    # signature pass (seen in q67's r10 plan); the function is pure
-    return pandas_udf("array<long>")(_sig_fn).asNondeterministic()
-
-
-def _crcperm_fused_udf(k: int, num_hashes: int):
-    # session-keyed wrapper memo — see text._memo_udf (r10)
-    from juliadb_jl_spark.functions.text import _memo_udf
-    return _memo_udf(("crcperm_fused", k, num_hashes),
-                     lambda: _crcperm_fused_udf_build(k, num_hashes))
-
-
-def _crcperm_fused_udf_build(k: int, num_hashes: int):
-    """tokens → crc32perm MinHash signature, FULLY fused: per doc, the
-    k-shingles are byte slices of the pre-joined UTF-8 text (the
-    `_md5_window_digs` offset walk), crc32-hashed and deduped as a set
-    of crc32 VALUES — not of the byte slices themselves — WITHOUT ever
-    decoding shingle strings or sending a shingle array back over
-    Arrow; the whole signature costs one tokens transfer in and
-    8·num_hashes bytes out per doc.  Deduping the crc values is
-    min-equivalent to deduping the shingles: every permutation hash
-    depends only on crc(s), so colliding shingles contribute identical
-    candidates to each min (the only observable difference is that an
-    intra-doc crc collision makes len(hs) count distinct CRCs, not
-    distinct shingles — len(hs) is internal and never emitted).  Replaces
-    the arrow_shingles → JVM array_distinct → second Arrow transfer →
-    explode → 32-min agg chain of the from-sets path; bit-identical to
-    it (the byte slice IS the utf-8 encoding of the " "-joined
-    shingle, same empty-token semantics as `shingles()`)."""
-    import numpy as np
-    import pandas as pd
-    from zlib import crc32 as _crc
-    from pyspark.sql.functions import pandas_udf
-    a_, b_ = perm_constants(num_hashes)
-    kk = k
-
-    def _sig_fn(col):
-        lens, hbs = [], []
-        for toks in col:
-            ts = [] if toks is None else list(toks)
-            nn = len(ts)
-            if nn < kk:
-                lens.append(0)
-                continue
-            jb = " ".join(ts).encode("utf-8", "surrogatepass")
-            obs = [0] * (nn + 1)
-            pos_ = 0
-            for j, t in enumerate(ts):
-                pos_ += len(t.encode("utf-8", "surrogatepass")) + 1
-                obs[j + 1] = pos_
-            hs = {_crc(jb[obs[i]:obs[i + kk] - 1])
-                  for i in range(nn - kk + 1)}
-            lens.append(len(hs))
-            hbs.extend(hs)
-        if not hbs:
-            return pd.Series([None] * len(col))
-        hb = np.fromiter(hbs, dtype=np.int64, count=len(hbs))
-        return pd.Series(_sig_mins(hb, lens, num_hashes, a_, b_))
-
-    _sig_fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # optimizer fence (guide §4.4): a downstream posexplode(signature)
-    # infers size/isnotnull filters that would re-evaluate the whole
-    # signature pass (seen in q67's r10 plan); the function is pure
-    return pandas_udf("array<long>")(_sig_fn).asNondeterministic()
+def _crcperm_from_tokens(col, k: int, num_hashes: int):
+    """tokens → crc32perm MinHash signature with no shingle string built:
+    each k-shingle is a byte range of the batch's joined tokens, so the
+    signature costs one tokens transfer in and 8·num_hashes bytes out per
+    doc.  Bit-identical to hashing `arrow_shingles` sets (the min over a
+    shingle multiset equals the min over its set).  NULL for a doc with
+    fewer than k tokens."""
+    t = K.tokens_of(col)
+    nwin, st, en = K.window_ranges(t, k)
+    return K.min_signature(K.crc_slices(t.buf, st, en), nwin,
+                           *perm_constants(num_hashes))
 
 
 # Vectorized portable-hash power tables: pows[i] = 31^i mod p and
@@ -850,54 +743,23 @@ def _ph_hash_slices(cp, starts, ends):
     return (S[ends] - S[starts]) % _P31 * pows[ends - 1] % _P31
 
 
-def _portable_sets_udf(num_hashes: int):
-    # session-keyed wrapper memo — see text._memo_udf (r10)
-    from juliadb_jl_spark.functions.text import _memo_udf
-    return _memo_udf(("portable_sets", num_hashes),
-                     lambda: _portable_sets_udf_build(num_hashes))
-
-
-def _portable_sets_udf_build(num_hashes: int):
-    """Per-doc portable-family MinHash signature from an (id, shset)
-    frame: ONE Arrow pass — no explode, no groupBy, ZERO exchanges —
-    the crc32perm fusion (VERDICT r9 #1) applied to the oracle-checkable
-    char-fold base.  All shingles of a batch concatenate into one
-    codepoint array (utf-32-le decode = Spark `ascii` per char, astral
-    included) and `_ph_hash_slices` hashes every shingle in a few
-    vector ops; mins are the shared `_sig_mins` segmented pass.
-    Bit-identical to the explode + portable_hash + 32-min aggregation
-    (the JVM reference `signature_portable_expr` in the tests)."""
+def _portable_from_sets(col, num_hashes: int):
+    """Portable-family MinHash signature of each row's shingle set: the
+    batch's shingles decode to one codepoint array (Spark `ascii` per
+    char, astral included) and `_ph_hash_slices` hashes them all in a
+    few vector ops.  Bit-identical to the explode + portable_hash +
+    32-min aggregation (`signature_portable_expr` in the tests)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    a_, b_ = perm_constants(num_hashes)
+    import pyarrow.compute as pc
 
-    def _sig_fn(col):
-        lens, parts, slens = [], [], []
-        for shset in col:
-            if shset is None or len(shset) == 0:
-                lens.append(0)
-                continue
-            lens.append(len(shset))
-            for s in shset:
-                parts.append(s)
-                slens.append(len(s))
-        if not parts:
-            return pd.Series([None] * len(col))
-        cp = np.frombuffer(
-            "".join(parts).encode("utf-32-le", "surrogatepass"),
-            dtype="<u4").astype(np.int64)
-        sl = np.asarray(slens, dtype=np.int64)
-        ends = np.cumsum(sl)
-        starts = ends - sl
-        hb = _ph_hash_slices(cp, starts, ends)
-        return pd.Series(_sig_mins(hb, lens, num_hashes, a_, b_))
-
-    _sig_fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # optimizer fence (guide §4.4): a downstream posexplode(signature)
-    # infers size/isnotnull filters that would re-evaluate the whole
-    # signature pass (seen in q67's r10 plan); the function is pure
-    return pandas_udf("array<long>")(_sig_fn).asNondeterministic()
+    flat = col.flatten()
+    cp = np.frombuffer(K.string_parts(flat)[0].tobytes().decode("utf-8")
+                       .encode("utf-32-le"), dtype="<u4").astype(np.int64)
+    ln = pc.utf8_length(flat).to_numpy(zero_copy_only=False).astype(np.int64)
+    ends = np.cumsum(ln)
+    starts = ends - ln
+    return K.min_signature(_ph_hash_slices(cp, starts, ends),
+                           K.list_lengths(col), *perm_constants(num_hashes))
 
 
 def _signature_from_sets(sets_: DataFrame, num_hashes: int,
@@ -921,8 +783,9 @@ def _signature_from_sets(sets_: DataFrame, num_hashes: int,
     # TWICE per row (ops 10/13 in plans/r10/qb0_..._before.txt).
     # size(shset) > 0 is exactly the condition under which the UDFs
     # return a non-null signature, so output is identical.
-    sig_udf = (_crcperm_sets_udf if hash_family == "crc32perm"
-               else _portable_sets_udf)(num_hashes)
+    kernel = (_crcperm_from_sets if hash_family == "crc32perm"
+              else _portable_from_sets)
+    sig_udf = K.arrow_kernel(kernel, "array<long>", num_hashes)
     return (sets_.filter(F.size("shset") > 0)
             .select("id", sig_udf(F.col("shset")).alias("signature")))
 
@@ -974,7 +837,8 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str = "text",
     signature is value-checked (q67)."""
     _check_hash_params(hash_family, _MINHASH_FAMILIES)
     if hash_family == "crc32perm":
-        sig_udf = _crcperm_fused_udf(k, num_hashes)
+        sig_udf = K.arrow_kernel(_crcperm_from_tokens, "array<long>", k,
+                               num_hashes)
         # native token-count pre-filter == the UDF's null condition
         # (n_tokens < k); filtering the UDF output instead makes
         # Catalyst evaluate the UDF twice (guide §4.4, see
@@ -1270,73 +1134,73 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
 # every cross-document verbatim repetition of length >= k.
 
 
-def _md5_window_digs(toks, k: int, raw: bool = False) -> list:
-    """All k-window md5 digests of a token list (hex, or the 16 raw
-    bytes with ``raw=True``), byte-identical to the JVM's
-    md5(concat_ws(" ", slice(toks, i, k))): each window is
-    one byte-slice of the pre-joined text, hashed with hashlib.
-    Runs inside Arrow UDF workers (~1 µs/window vs ~40 µs for the
-    interpreted transform+slice+concat_ws HOF — the r6 winnow rung
-    discovery that de-cliffed the whole substring family)."""
-    from hashlib import md5 as _md5
-    nn = len(toks)
-    if nn < k:
-        return []
-    jb = " ".join(toks).encode("utf-8", "surrogatepass")
-    obs = [0] * (nn + 1)
-    pos_ = 0
-    for j, t in enumerate(toks):
-        pos_ += len(t.encode("utf-8", "surrogatepass")) + 1
-        obs[j + 1] = pos_
-    if raw:
-        return [_md5(jb[obs[i]:obs[i + k] - 1]).digest()
-                for i in range(nn - k + 1)]
-    return [_md5(jb[obs[i]:obs[i + k] - 1]).hexdigest()
-            for i in range(nn - k + 1)]
-
-
 _POLY64_P = 1099511628211  # FNV-1a prime (odd → bijective step mod 2^64)
 
 
-def _poly64_window_fps(col, k: int):
-    """8-byte window fingerprints for a BATCH of token lists, fully
-    vectorized: crc32 per token (C-speed, the crc32perm base), then
-    each k-window fp is the degree-(k-1) polynomial
-    Σ crc(t_{i+j})·p^{k-1-j} (mod 2^64, natural uint64 wraparound)
-    over one flat batch-wide array via a strided (windows × k)
-    multiply-sum — no per-window Python call at all, vs ~650 ns of
-    hashlib md5 per window on the md5 path.  Windows that straddle a
-    doc boundary are computed then DROPPED by the per-doc slice (cost:
-    k-1 wasted lanes per doc).  Returns a list of per-doc int64 lists
-    aligned with `col` (empty list for <k-token docs)."""
+def _window_fps_batch(col, k: int, fmt: str):
+    """struct<fps, poss> per doc: each k-token window's fingerprint and
+    1-based position ([] for a doc with fewer than k tokens).  hex/bin:
+    md5 of the window's bytes, identical to the JVM's
+    md5(concat_ws(" ", slice(tokens, i, k))); u64: the sliding
+    polynomial Σ crc32(t_{i+j})·p^{k-1-j} mod 2^64 over per-token crc32,
+    no per-window hash call."""
     import numpy as np
-    from zlib import crc32 as _crc
-    lens, flat = [], []
-    for toks in col:
-        ts = [] if toks is None else list(toks)
-        lens.append(len(ts))
-        flat.extend(ts)
-    out = []
-    if not flat:
-        return [[] for _ in lens]
-    c = np.fromiter(
-        (_crc(t.encode("utf-8", "surrogatepass")) for t in flat),
-        dtype=np.uint64, count=len(flat))
-    if len(c) >= k:
-        pw = np.array([pow(_POLY64_P, k - 1 - j, 1 << 64)
-                       for j in range(k)], dtype=np.uint64)
-        sw = np.lib.stride_tricks.sliding_window_view(c, k)
-        with np.errstate(over="ignore"):
-            fps_all = (sw * pw).sum(axis=1, dtype=np.uint64) \
-                .view(np.int64)
-    s = 0
-    for nn in lens:
-        if nn < k:
-            out.append([])
-        else:
-            out.append(fps_all[s:s + nn - k + 1].tolist())
-        s += nn
-    return out
+    import pyarrow as pa
+    t = K.tokens_of(col)
+    nwin, g = K.windows(t.ntok, k)
+    if fmt == "u64":
+        base = K.crc_slices(t.buf, t.st, t.en).astype(np.uint64)
+        fps = pa.array(K.poly_windows(base, g, k, _POLY64_P).view(np.int64))
+    else:
+        d = K.md5_slices(t.buf, t.st[g], t.en[g + k - 1])
+        fps = (K.fixed_strings(d, 16, pa.binary()) if fmt == "bin"
+               else K.fixed_strings(d.hex().encode("ascii"), 32))
+    return K.struct_of_lists(nwin, fps=fps,
+                             poss=pa.array(K.positions(nwin)))
+
+
+def _window_fp_set_batch(col, k: int):
+    """Per-doc DISTINCT raw md5 window digests (array<binary>)."""
+    import numpy as np
+    import pyarrow as pa
+    t = K.tokens_of(col)
+    nwin, st, en = K.window_ranges(t, k)
+    d = np.frombuffer(K.md5_slices(t.buf, st, en), dtype="<u8") \
+        .reshape(-1, 2)
+    doc, a, b = K.doc_unique(K.row_index(nwin), d[:, 0], d[:, 1])
+    return K.list_array(np.bincount(doc, minlength=len(nwin)),
+                        K.fixed_strings(np.column_stack([a, b]).tobytes(),
+                                        16, pa.binary()))
+
+
+def _winnow_batch(col, k: int, w: int):
+    """struct<fps, poss> per doc: the winnowed subset of the hex md5
+    window fingerprints — the minimum of every run of w consecutive
+    windows (ties → leftmost), deduplicated, in position order."""
+    import numpy as np
+    import pyarrow as pa
+    t = K.tokens_of(col)
+    nwin, st, en = K.window_ranges(t, k)
+    # hex digests are ascii: S32 bytes order == str order
+    a = np.frombuffer(K.md5_slices(t.buf, st, en).hex().encode("ascii"),
+                      dtype="S32")
+    win0 = np.cumsum(nwin) - nwin
+    runs = np.maximum(nwin - (w - 1), 0)
+    s = np.repeat(win0, runs) + K.positions(runs) - 1
+    m, idx = a[s], s
+    for off in range(1, w):
+        b = a[s + off]
+        take = b < m          # strict: ties keep leftmost
+        m = np.where(take, b, m)
+        idx = np.where(take, s + off, idx)
+    # a selection's pos determines its fp, so distinct (fp, pos) ==
+    # distinct pos — one vectorized unique over the batch
+    u = np.unique(idx)
+    doc = K.row_index(nwin)[u]
+    return K.struct_of_lists(
+        np.bincount(doc, minlength=len(nwin)),
+        fps=K.fixed_strings(a[u].tobytes(), 32),
+        poss=pa.array((u - win0[doc] + 1).astype(np.int32)))
 
 
 def _check_window_k(k: int) -> None:
@@ -1358,57 +1222,30 @@ def _window_fps(df: DataFrame, id_col: str, text_col: str, k: int,
     keep hex where the fp IS the artifact (substring_index).
     ``fmt="u64"`` goes further: an 8-byte int64
     fp from crc32-per-token + a vectorized sliding polynomial
-    (`_poly64_window_fps`) — no per-window hash call and half bin's
+    (`_window_fps_batch`) — no per-window hash call and half bin's
     exchange bytes, at a ~2.6e-3 per-corpus collision probability at
     the 309M-window rung (vs ~0 for md5): acceptable where the fp
     only ever feeds span DETECTION, wrong where it is a persisted
     artifact.
 
-    One build: a fused Arrow pass (`_md5_window_digs`), each window a
-    byte-slice of the pre-joined document, md5-identical to the JVM's
-    md5(concat_ws(" ", slice(tokens, i, k))). The interpreted
-    `transform`+`slice`+`concat_ws` form it replaced (~40 µs/window,
-    the floor under every early substring-dedup rung) is the bit-parity
+    One build: a fused Arrow pass (`_window_fps_batch`), each window a
+    byte range of the batch's joined tokens. The interpreted
+    `transform`+`slice`+`concat_ws` form it replaced is the bit-parity
     reference in the tests (SCALING.md "Fingerprint builders: one
     fused path")."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     from juliadb_jl_spark.functions.text import tokens
 
     _check_window_k(k)
     if fmt not in ("hex", "bin", "u64"):
         raise ValueError(f"fmt must be 'hex', 'bin' or 'u64' "
                          f"(got {fmt!r})")
-    kk, raw = k, fmt == "bin"
-
-    if fmt == "u64":
-        def _fps_fn(col):
-            digs_all = _poly64_window_fps(col, kk)
-            return pd.DataFrame(
-                {"fps": digs_all,
-                 "poss": [list(range(1, len(d) + 1)) for d in digs_all]})
-    else:
-        def _fps_fn(col):
-            fps_out, poss_out = [], []
-            for toks in col:
-                # Arrow hands array columns over as numpy arrays,
-                # where `toks or []` raises — explicit None check
-                digs = ([] if toks is None
-                        else _md5_window_digs(toks, kk, raw))
-                fps_out.append(digs)
-                poss_out.append(list(range(1, len(digs) + 1)))
-            return pd.DataFrame({"fps": fps_out, "poss": poss_out})
-
-    _fps_fn.__annotations__ = {"col": pd.Series, "return": pd.DataFrame}
     ftype = {"hex": "string", "bin": "binary", "u64": "long"}[fmt]
-    # fence: explode(arrays_zip(...)) otherwise duplicates the pass
-    _fps = pandas_udf(
-        f"struct<fps:array<{ftype}>,poss:array<int>>")(_fps_fn) \
-        .asNondeterministic()
+    fps = K.arrow_kernel(_window_fps_batch,
+                         f"struct<fps:array<{ftype}>,poss:array<int>>",
+                         k, fmt)
     return (_spread(df)
             .select(F.col(id_col).alias("id"),
-                    _fps(tokens(F.col(text_col))).alias("r"))
+                    fps(tokens(F.col(text_col))).alias("r"))
             .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
                     .alias("s"))
             .select("id", F.col("s.poss").alias("pos"),
@@ -1419,27 +1256,14 @@ def _window_fp_set(df: DataFrame, text_col: str, k: int) -> DataFrame:
     """Per-doc DISTINCT k-window fingerprints as bare (fp) rows of 16
     raw md5 digest bytes — the index-build sibling of `_window_fps` for
     consumers that need neither positions nor per-occurrence rows
-    (substring_index). Skipping the poss arrays and the struct
-    zip/explode keeps the Arrow transfer to one flat array column, and
-    the raw bytes let the downstream distinct exchange move half the
-    key bytes of the hex form."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    (substring_index). One flat array column crosses Arrow, and the raw
+    bytes let the downstream distinct exchange move half the key bytes
+    of the hex form."""
     from juliadb_jl_spark.functions.text import tokens
     _check_window_k(k)
-
-    def _set_fn(col):
-        return pd.Series([
-            [] if toks is None
-            else list(set(_md5_window_digs(toks, k, raw=True)))
-            for toks in col])
-
-    _set_fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # fence: the explode below otherwise duplicates the pass (§4.4)
-    _fps = pandas_udf("array<binary>")(_set_fn).asNondeterministic()
+    fps = K.arrow_kernel(_window_fp_set_batch, "array<binary>", k)
     return (_spread(df)
-            .select(_fps(tokens(F.col(text_col))).alias("fps"))
+            .select(fps(tokens(F.col(text_col))).alias("fps"))
             .select(F.explode("fps").alias("fp")))
 
 
@@ -1947,68 +1771,28 @@ def winnow_fingerprints(df: DataFrame, id_col: str,
 
     Returns (id, pos, fp) — the selected subset of the window table.
 
-    Scale: build and selection are ONE Arrow-batched pass: tokens
-    cross the Arrow boundary once, each k-window is a byte-slice of
-    the pre-joined document (hashlib md5 ≈ 1 µs/window, bit-identical
-    to the JVM's md5 of concat_ws), the sliding min is w-1 vectorized
-    numpy passes, and only the selected ~2/(w+1) fraction returns —
-    zero shuffle end to end. The window-frame form (`min(struct(fp,
+    Scale: build and selection are ONE Arrow-batched pass
+    (`_winnow_batch`): tokens cross the Arrow boundary once, each
+    k-window is a byte range of the batch's joined tokens (md5,
+    bit-identical to the JVM's md5 of concat_ws), the sliding min is w-1
+    vectorized numpy passes, and only the selected ~2/(w+1) fraction
+    returns — zero shuffle end to end. The window-frame form (`min(struct(fp,
     pos))` over an id-partitioned, pos-ordered w-row frame + distinct)
-    is the selection reference in the tests; its interpreted-HOF md5
-    build cost 389 s at the 5M-doc rung against 41 s for this pass,
-    and the nested `array_min(slice(...))` form took 258 s at SF1
-    (SCALING.md "Fingerprint builders: one fused path"). Per-row
-    memory is O(doc windows): multi-100k-token documents should be
-    chunked first (chunk_documents), as everywhere else."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    is the selection reference in the tests (SCALING.md "Fingerprint
+    builders: one fused path"). Per-row memory is O(doc windows):
+    multi-100k-token documents should be chunked first
+    (chunk_documents), as everywhere else."""
     from juliadb_jl_spark.functions.text import tokens
 
     _check_window_k(k)
     if w < 1:
         raise ValueError(f"need w >= 1 (got {w})")
-    kk, ww = k, w
-
-    def _winnow_sel_fn(col):
-        fps_out, poss_out = [], []
-        for toks in col:
-            nn = 0 if toks is None else len(toks)
-            length = nn - kk + 1 - (ww - 1)   # number of w-starts
-            if length < 1:
-                fps_out.append([])
-                poss_out.append([])
-                continue
-            digs = _md5_window_digs(toks, kk)
-            # hex digests are ascii: S32 bytes order == str order
-            a = np.array(digs, dtype="S32")
-            m = a[:length].copy()
-            idx = np.arange(length)
-            for off in range(1, ww):
-                b = a[off:off + length]
-                take = b < m          # strict: ties keep leftmost
-                m = np.where(take, b, m)
-                idx = np.where(take, np.arange(off, off + length), idx)
-            # a selection's pos determines its fp, so distinct
-            # (fp,pos) == distinct pos — one vectorized unique
-            upos = np.unique(idx)
-            fps_out.append(a[upos].astype("U32").tolist())
-            poss_out.append((upos + 1).tolist())
-        return pd.DataFrame({"fps": fps_out, "poss": poss_out})
-
-    # module has `from __future__ import annotations`, so inline
-    # hints arrive as strings pyspark can't resolve — set real ones
-    _winnow_sel_fn.__annotations__ = {"col": pd.Series,
-                                      "return": pd.DataFrame}
     # fence: explode(arrays_zip(...)) otherwise duplicates the pass
-    _winnow_sel = pandas_udf(
-        "struct<fps:array<string>,poss:array<int>>")(_winnow_sel_fn) \
-        .asNondeterministic()
-
-    sel = _winnow_sel(tokens(F.col(text_col)))
+    sel = K.arrow_kernel(_winnow_batch,
+                         "struct<fps:array<string>,poss:array<int>>", k, w)
     return (_spread(df)
-            .select(F.col(id_col).alias("id"), sel.alias("r"))
+            .select(F.col(id_col).alias("id"),
+                    sel(tokens(F.col(text_col))).alias("r"))
             .select("id", F.explode(F.arrays_zip("r.fps", "r.poss"))
                     .alias("s"))
             .select("id", F.col("s.poss").alias("pos"),

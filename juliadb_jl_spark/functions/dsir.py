@@ -19,7 +19,7 @@ is a pure function of the document key (``g = logw − ln(−ln(u))`` with
 runs, engines, partition layouts, and appends.
 
 Scale (100 TB): every document is featurized in ONE fused Arrow pass
-(`_doc_hist`): a pandas UDF over the JVM token list slices each unigram
+(`_doc_hist`): an Arrow UDF over the JVM token list slices each unigram
 and bigram out of the token bytes, buckets it in numpy (md5 + the
 31-bit fold for the portable family, a vectorized XXH64 for xxhash64)
 and returns the document's bucket histogram — at most B
@@ -42,6 +42,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from juliadb_jl_spark.functions import _kernels as K
 from juliadb_jl_spark.functions.dedup import (_MD5_POWS, _P31, _spread,
                                               perm_constants,
                                               portable_hash_md5)
@@ -122,8 +123,8 @@ def gram_bucket(col: Column, n_buckets: int, seed: int = 1,
 # ---------------------------------------------------------------------------
 # Fused per-document histogram kernel
 # ---------------------------------------------------------------------------
-# Grams are never materialized as strings: the batch's tokens are joined
-# with " " into ONE byte buffer, so every unigram and every bigram
+# Grams are never materialized as strings: the batch's tokens are read
+# into ONE byte buffer (`_kernels.tokens_of`), so every unigram and bigram
 # (t[i] + " " + t[i+1], the `arrow_shingles(k=2)` bytes) is a contiguous
 # [start, end) slice of it.  Each slice is bucketed in numpy and the
 # (document, bucket) pairs are counted with one np.unique per batch.
@@ -230,21 +231,14 @@ def _xxhash64_spark(buf, starts, ends, seed: int):
         return _fmix(h).view(np.int64)
 
 
-def _portable_fold(jb: bytes, starts, ends):
+def _portable_fold(jb, starts, ends):
     """``portable_hash_md5`` for every gram slice ``jb[s:e]``: md5 (one C
     call per gram), then the 32-term fold over its hex digits. Digest
     byte k is hex digits 2k and 2k+1, so its share of the fold is a
     (16, 256) table lookup; the 16 shares (each < 2^31 after mod) sum
     below 2^35 — exact in int64, one mod at the end."""
     import numpy as np
-    try:
-        # CPython's built-in md5: ~0.3 µs per short gram against ~0.6 µs
-        # through hashlib's OpenSSL constructor (same digest)
-        from _md5 import md5
-    except ImportError:
-        from hashlib import md5
-    d = np.frombuffer(b"".join([md5(jb[s:e]).digest() for s, e in
-                                zip(starts.tolist(), ends.tolist())]),
+    d = np.frombuffer(K.md5_slices(jb, starts, ends),
                       dtype=np.uint8).reshape(-1, 16)
     v = np.arange(256, dtype=np.int64)
     hi, lo = v >> 4, v & 15
@@ -258,68 +252,31 @@ def _portable_fold(jb: bytes, starts, ends):
 
 
 def _doc_histograms(col, n_buckets: int, seed: int, bigrams: bool,
-                    hash_family: str) -> list:
-    """Batch core of `_doc_hist`: one histogram per token list in `col`
-    — a list of (bucket, count) pairs ascending by bucket, or None for a
+                    hash_family: str):
+    """Per-document bucket histogram of a batch of token lists:
+    array<struct<bucket:int, cnt:bigint>> ascending by bucket, NULL for a
     document with no grams. Bit-identical to bucketing
     `word_grams(..., bigrams)` with `gram_bucket` and counting."""
     import numpy as np
-    ntok, flat = [], []
-    for toks in col:
-        if toks is None:
-            ntok.append(0)
-            continue
-        ntok.append(len(toks))
-        flat.extend(toks)
-    enc = [t.encode("utf-8", "surrogatepass") for t in flat]
-    jb = b" ".join(enc)
-    tl = np.fromiter(map(len, enc), dtype=np.int64, count=len(enc))
-    st = np.zeros(len(enc), dtype=np.int64)
-    np.cumsum(tl[:-1] + 1, out=st[1:])
-    en = st + tl
-    gdoc = np.repeat(np.arange(len(ntok), dtype=np.int64), ntok)
+    import pyarrow as pa
+    t = K.tokens_of(col)
+    st, en, gdoc = t.st, t.en, K.row_index(t.ntok)
     if bigrams:
         same = gdoc[:-1] == gdoc[1:]   # t[i], t[i+1] in one document
         st = np.concatenate([st, st[:-1][same]])
         en = np.concatenate([en, en[1:][same]])
         gdoc = np.concatenate([gdoc, gdoc[:-1][same]])
     if hash_family == "xxhash64":
-        b = np.mod(_xxhash64_spark(np.frombuffer(jb, dtype=np.uint8),
-                                   st, en, seed), n_buckets)
+        b = np.mod(_xxhash64_spark(t.buf, st, en, seed), n_buckets)
     else:
         a_, b_ = bucket_constants(seed)
-        b = ((a_ * _portable_fold(jb, st, en) + b_) % _P31) % n_buckets
+        b = ((a_ * _portable_fold(t.buf, st, en) + b_) % _P31) % n_buckets
     keys, cnt = np.unique(gdoc * n_buckets + b, return_counts=True)
-    bounds = np.searchsorted(keys // n_buckets,
-                             np.arange(len(ntok) + 1)).tolist()
-    bl, cl = (keys % n_buckets).tolist(), cnt.tolist()
-    return [list(zip(bl[s:e], cl[s:e])) if e > s else None
-            for s, e in zip(bounds[:-1], bounds[1:])]
-
-
-def _doc_hist_udf(n_buckets: int, seed: int, bigrams: bool,
-                  hash_family: str):
-    # session-keyed wrapper memo — see text._memo_udf
-    from juliadb_jl_spark.functions.text import _memo_udf
-    return _memo_udf(
-        ("dsir_hist", n_buckets, seed, bigrams, hash_family),
-        lambda: _doc_hist_udf_build(n_buckets, seed, bigrams, hash_family))
-
-
-def _doc_hist_udf_build(n_buckets: int, seed: int, bigrams: bool,
-                        hash_family: str):
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _fn(col):
-        return pd.Series(_doc_histograms(col, n_buckets, seed, bigrams,
-                                         hash_family))
-
-    _fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # optimizer fence (text._gram_join_udf_build): the inline() over the
-    # histogram infers size/isnotnull filters that would otherwise run
-    # the kernel twice; the function is pure
-    return pandas_udf(_HIST_TYPE)(_fn).asNondeterministic()
+    per = np.bincount(keys // n_buckets, minlength=len(t.ntok))
+    hist = pa.StructArray.from_arrays(
+        [pa.array((keys % n_buckets).astype(np.int32)), pa.array(cnt)],
+        names=["bucket", "cnt"])
+    return K.list_array(per, hist, per == 0)
 
 
 def _doc_hist(text: Column, n_buckets: int, seed: int, bigrams: bool,
@@ -328,8 +285,8 @@ def _doc_hist(text: Column, n_buckets: int, seed: int, bigrams: bool,
     pass over `tokens(text)` (Java ``\\s+`` split and empty tokens
     exactly as `word_grams`): array<struct<bucket:int, cnt:bigint>>,
     NULL for a document with no grams."""
-    return _doc_hist_udf(n_buckets, seed, bigrams, hash_family)(
-        tokens(text))
+    return K.arrow_kernel(_doc_histograms, _HIST_TYPE, n_buckets, seed,
+                          bigrams, hash_family)(tokens(text))
 
 
 def doc_bucket_counts(df: DataFrame, id_col: str, text_col: str = "text",

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from juliadb_jl_spark.functions import _kernels as K
+
 # Small keyword sets per language. The scorer is deterministic — the same
 # counts computed in any engine give the same answer; accuracy depends on
 # real-language keywords which can be extended freely.
@@ -408,190 +410,41 @@ def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             .withColumn("fingerprint", fingerprint(c)))
 
 
-# Session-keyed pandas_udf wrapper memo (r10): a UserDefinedFunction
-# caches its JVM registration (_judf) after first use, so reusing ONE
-# wrapper across query constructions skips ~20-30 synchronous py4j
-# round trips per call site per construction (VERDICT r9 #6 — the same
-# measured loop as q36's one-parse fix).  Keyed on applicationId so a
-# restarted session can never see a wrapper bound to a dead JVM judf;
-# performance-only (the factories below are pure functions of the key).
-_UDF_MEMO: dict = {}
+def _gram_strings(col, n: int):
+    """array<string> per doc: its word n-grams, each the byte range of n
+    joined tokens — bit-identical to `shingles()` (concat_ws keeps empty
+    strings, and so does the joined buffer); [] for a doc with fewer than
+    n tokens."""
+    t = K.tokens_of(col)
+    nwin, st, en = K.window_ranges(t, n)
+    return K.list_array(nwin, K.slice_strings(t.buf, st, en))
 
 
-def _memo_udf(key: tuple, maker):
-    from pyspark import SparkContext
-    sc = SparkContext._active_spark_context
-    k = (sc.applicationId if sc is not None else None,) + key
-    u = _UDF_MEMO.get(k)
-    if u is None:
-        if len(_UDF_MEMO) > 256:
-            _UDF_MEMO.clear()
-        u = _UDF_MEMO[k] = maker()
-    return u
-
-
-def _gram_join_udf(n: int):
-    return _memo_udf(("gram_join", n), lambda: _gram_join_udf_build(n))
-
-
-def _gram_join_udf_build(n: int):
-    """pandas_udf: token array → word n-gram array, built as byte
-    slices of the pre-joined text (one join + offset walk per doc,
-    ~0.3 µs/gram) instead of the interpreted `transform`+`slice`+
-    `concat_ws` HOF (~12–40 µs/gram — the r6 winnow-rung discovery).
-    BIT-COMPATIBLE with `shingles()` (concat_ws keeps empty strings,
-    and so does " ".join). Returns [] for docs with fewer than n
-    tokens."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _fn(col):
-        out = []
-        for toks in col:
-            ts = [] if toks is None else list(toks)
-            nn = len(ts)
-            if nn < n:
-                out.append([])
-                continue
-            jb = " ".join(ts).encode("utf-8", "surrogatepass")
-            obs = [0] * (nn + 1)
-            pos_ = 0
-            for j, t in enumerate(ts):
-                pos_ += len(t.encode("utf-8", "surrogatepass")) + 1
-                obs[j + 1] = pos_
-            out.append([jb[obs[i]:obs[i + n] - 1].decode("utf-8",
-                                                         "surrogatepass")
-                        for i in range(nn - n + 1)])
-        return pd.Series(out)
-
-    _fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    # asNondeterministic is an optimizer FENCE, not a semantics change
-    # (the function is pure): without it, any predicate that references
-    # the gram array — a caller's size(shset) > 0, or the size > 0 /
-    # isnotnull filter InferFiltersFromGenerate derives from a
-    # downstream explode — is pushed below the projection by
-    # DUPLICATING the ArrowEvalPython node, and every doc pays the
-    # gram build twice (guide §4.4; seen in the r10 baseline plans of
-    # q35 and qb0).  Every call site uses the result in a Project /
-    # Generate, where non-deterministic expressions are allowed.
-    return pandas_udf("array<string>")(_fn).asNondeterministic()
-# 64-bit per-token crc base — the crc32perm-minhash lesson (dedup.py
-# `_crcperm_fused_udf`) applied to the hashed-gram-key family that
-# novelty_scores / frequent_phrases / split_leakage's shuffle tier ride.
-# The r6/r7 shape materialized every gram STRING through Arrow
-# (`arrow_shingles`) and hashed it JVM-side (2× xxhash64); these helpers
-# hash the TOKEN once (two C-speed zlib.crc32 calls) and derive every
-# gram key from the flat token-hash array with two strided
-# multiply-sums — no gram string is ever built, and the Arrow transfer
-# shrinks from ~n-word strings to 16 bytes per gram.
-#
-# Exactness class: identical to the 2×xxhash64 contract it replaces —
-# distinct grams collide only if (a) two distinct tokens collide on the
-# full 64-bit base (~V²/2⁶⁵: ~0.03 expected pairs at a 10⁹-token
-# vocabulary) or (b) two distinct token-hash sequences collide on BOTH
-# lanes (degree-(n−1) polynomials with independent odd multipliers,
-# ~2⁻¹²⁸ heuristic). Fixed-n grams are in bijection with their joined
-# strings (tokens are whitespace-free), so token-sequence identity IS
-# gram identity.
-# ---------------------------------------------------------------------------
-
-_POLY_A = 1099511628211          # FNV-1a 64-bit prime (odd)
-_POLY_B = 6364136223846793005    # Knuth MMIX LCG multiplier (odd)
-
-
-def _gram_lanes_flat(col, n: int, drop_empty: bool = False):
-    """Both 64-bit gram-key lanes for a BATCH of token lists, fully
-    vectorized. Returns (h1_all, h2_all, lens): flat uint64 lane
-    arrays over every doc's grams in order, plus the per-doc gram
-    counts (0 for <n-token docs) aligned with `col`. Token base =
-    crc32(bytes) in the high word, crc32(bytes + b'\\x9e') in the low
-    word (a suffix byte, NOT a seeded crc32 — crc is affine in the
-    seed, so same-length collisions would survive any seed)."""
+def _distinct_gram_count(col, n: int, drop_empty: bool):
     import numpy as np
-    from zlib import crc32 as _crc
-    lens, flat = [], []
-    for toks in col:
-        if toks is None:
-            ts = []
-        elif drop_empty:
-            ts = [t for t in toks if t]
-        else:
-            ts = list(toks)
-        lens.append(len(ts))
-        flat.extend(ts)
-    counts = [max(0, m - n + 1) for m in lens]
-    if not flat or max(lens) < n:
-        z = np.empty(0, dtype=np.uint64)
-        return z, z, [0] * len(lens)
-    enc = [t.encode("utf-8", "surrogatepass") for t in flat]
-    c = np.fromiter(((_crc(b) << 32) | _crc(b + b"\x9e") for b in enc),
-                    dtype=np.uint64, count=len(enc))
-    sw = np.lib.stride_tricks.sliding_window_view(c, n)
-    pw1 = np.array([pow(_POLY_A, n - 1 - j, 1 << 64) for j in range(n)],
-                   dtype=np.uint64)
-    pw2 = np.array([pow(_POLY_B, n - 1 - j, 1 << 64) for j in range(n)],
-                   dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        h1_all = (sw * pw1).sum(axis=1, dtype=np.uint64)
-        h2_all = (sw * pw2).sum(axis=1, dtype=np.uint64)
-    # drop the k-1 straddle lanes per doc (the _poly64_window_fps trick:
-    # compute over the flat array, slice per doc)
-    keep = np.zeros(len(c) - n + 1, dtype=bool)
-    s = 0
-    for m, cnt in zip(lens, counts):
-        if cnt:
-            keep[s:s + cnt] = True
-        s += m
-    return h1_all[keep], h2_all[keep], counts
-
-
-def _doc_unique_pairs(h1_all, h2_all, counts):
-    """Per-doc DISTINCT (h1, h2) pairs from `_gram_lanes_flat` output:
-    yields one (u1, u2) uint64 array pair per doc (empty for gramless
-    docs). Dedup is a bytes-view np.unique over the (m, 2) pair rows —
-    pair identity, no Python-object keys."""
-    import numpy as np
-    s = 0
-    pair_t = np.dtype([("a", "<u8"), ("b", "<u8")])
-    for cnt in counts:
-        if not cnt:
-            yield (np.empty(0, dtype=np.uint64),) * 2
-            continue
-        buf = np.empty(cnt, dtype=pair_t)
-        buf["a"] = h1_all[s:s + cnt]
-        buf["b"] = h2_all[s:s + cnt]
-        u = np.unique(buf)
-        yield np.ascontiguousarray(u["a"]), np.ascontiguousarray(u["b"])
-        s += cnt
+    import pyarrow as pa
+    nwin, _, h1, h2 = K.gram_keys(K.tokens_of(col, drop_empty), n)
+    doc = K.doc_unique(K.row_index(nwin), h1, h2)[0]
+    return pa.array(np.bincount(doc, minlength=len(nwin)).astype(np.int64))
 
 
 def distinct_gram_count_udf(n: int, drop_empty: bool = False):
-    """pandas_udf: token array → count of DISTINCT word n-grams,
-    computed from the fused lane pass (no gram strings, no array
-    column back over Arrow — one int64 per doc out). Counts distinct
-    (h1, h2) PAIRS so it is consistent by construction with the rows a
-    fused gram-key emitter would produce for the same doc (novelty's
-    n_grams divisor must match its exploded key stream exactly)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _fn(col):
-        h1, h2, counts = _gram_lanes_flat(col, n, drop_empty)
-        return pd.Series([len(u1) for u1, _ in
-                          _doc_unique_pairs(h1, h2, counts)])
-
-    _fn.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    return pandas_udf("long")(_fn)
+    """arrow_udf: token array → count of DISTINCT word n-grams, from the
+    128-bit gram keys (no gram strings, one int64 per doc out). Counts
+    distinct (h1, h2) PAIRS so it is consistent by construction with the
+    rows a gram-key emitter produces for the same doc (novelty's n_grams
+    divisor must match its exploded key stream exactly)."""
+    return K.arrow_kernel(_distinct_gram_count, "long", n, drop_empty)
 
 
 def arrow_shingles(col: Column, k: int = 3) -> Column:
-    """`shingles()` built through the fused Arrow byte-slice pass —
+    """`shingles()` built by one Arrow kernel pass (`_gram_strings`) —
     bit-identical output (empty tokens preserved, " "-joined), ~20×
     cheaper per gram than the interpreted HOF at corpus scale. Use at
     explode-heavy call sites (novelty, contamination, attribution,
     split leakage, the minhash/jaccard shingle-set builders); the HOF
     `shingles()` stays for composition inside other expressions."""
-    return _gram_join_udf(k)(tokens(col))
+    return K.arrow_kernel(_gram_strings, "array<string>", k)(tokens(col))
 
 
 def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
@@ -607,7 +460,7 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
     Scale (100 TB): naive n-gram counting shuffles a gram table whose
     long tail is singleton grams — nearly corpus-token-sized for
     n >= 3. The count therefore rides a 128-bit hashed gram key (the
-    two `_gram_lanes_flat` lanes, computed inside one fused Arrow pass
+    two `_kernels.gram_keys` lanes, computed inside one Arrow pass
     where tokens cross the boundary once), which shrinks every shuffle
     entry to 16 bytes regardless of phrase length; no gram string is
     built on the count side. Text is recovered afterwards by a second
@@ -623,9 +476,8 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
     output; their verdicts are in SCALING.md ("frequent_phrases" and
     "Fingerprint builders: one fused path")."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from juliadb_jl_spark.functions.curation import _doc_gram_offsets
     from juliadb_jl_spark.functions.dedup import _spread
     if n < 1:
         raise ValueError(f"need n >= 1 (got {n})")
@@ -634,14 +486,12 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
 
     src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     # The count aggregation rides a 128-bit hashed gram key: phrase
-    # TEXT never crosses the count shuffle. The keys are the two
-    # polynomial lanes of `_gram_lanes_flat` computed INSIDE the Arrow
-    # pass. Text is recovered afterwards from a second gram pass joined
-    # against the (frequent-set-sized) hash counts with min(phrase) per
-    # key; tie-break/top-k semantics stay exact because ordering happens
-    # after recovery. Cross-lane hash collisions would merge two
-    # phrases' counts (probabilistic, ~1e-20 at 1e9 grams — the
-    # documented novelty_scores contract).
+    # TEXT never crosses the count shuffle. Text is recovered afterwards
+    # from a second gram pass joined against the (frequent-set-sized)
+    # hash counts with min(phrase) per key; tie-break/top-k semantics
+    # stay exact because ordering happens after recovery. Cross-lane
+    # hash collisions would merge two phrases' counts (probabilistic,
+    # ~1e-20 at 1e9 grams — the documented novelty_scores contract).
     p4 = 4 * df.sparkSession.sparkContext.defaultParallelism
     sc = df.sparkSession.sparkContext
     nn_ = n
@@ -649,13 +499,12 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
     def _emit_occ(it):
         # every gram OCCURRENCE as its 16-byte key pair — nothing else
         # crosses Arrow on the count side
-        for pdf in it:
-            h1, h2, _ = _gram_lanes_flat(pdf["__toks"], nn_,
-                                         drop_empty=True)
-            if not len(h1):
-                continue
-            yield pd.DataFrame({"__h1": h1.view(np.int64),
-                                "__h2": h2.view(np.int64)})
+        for rb in it:
+            _, _, h1, h2 = K.gram_keys(K.tokens_of(rb.column(0), True), nn_)
+            if len(h1):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(h1.view(np.int64)), pa.array(h2.view(np.int64))],
+                    names=["__h1", "__h2"])
 
     toks_src = _spread(df).select(tokens(src).alias("__toks"))
     # the stream's long tail is singleton grams — map-side partial agg
@@ -663,19 +512,17 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
     # distinct key (the r6 bounded-agg rung class). Pre-partition by
     # the hash key so each count map holds distinct/partitions —
     # 16-byte rows, not phrase text.
-    gc = (toks_src.mapInPandas(_emit_occ, "__h1 long, __h2 long")
+    gc = (toks_src.mapInArrow(_emit_occ, "__h1 long, __h2 long")
           .repartition(p4, "__h1", "__h2"))
     cnt = (gc.groupBy("__h1", "__h2")
            .agg(F.count(F.lit(1)).alias("freq"))
            .filter(F.col("freq") >= min_count))
 
     def _recover(matches, cand_keys=None):
-        # Fused text recovery: a second gram pass that re-derives
-        # (phrase, h1, h2) per occurrence — but slices the phrase
-        # string ONLY for grams that survive the candidate test
-        # (driver-held key set, pushed into the Arrow pass like
-        # split_leakage's fused tier; np.isin on the h1 lane does the
-        # vectorized coarse cut, the exact pair set confirms).
+        # Text recovery: a second gram pass that re-derives (phrase, h1,
+        # h2) per occurrence — but slices the phrase string ONLY for
+        # grams that survive the candidate test (driver-held key set,
+        # pushed into the Arrow pass like split_leakage's fused tier).
         # Per-task key-dedup bounds emitted rows by |candidates|.
         bc = (sc.broadcast((np.sort(
             np.array([kk_[0] for kk_ in cand_keys], dtype=np.int64)),
@@ -684,51 +531,21 @@ def frequent_phrases(df: DataFrame, n: int = 3, min_count: int = 10,
 
         def _emit_phr(it):
             cand = bc.value if bc is not None else None
-            seen = set()
-            for pdf in it:
-                col = pdf["__toks"]
-                h1, h2, counts = _gram_lanes_flat(col, nn_,
-                                                  drop_empty=True)
+            seen: set = set()
+            for rb in it:
+                t = K.tokens_of(rb.column(0), drop_empty=True)
+                _, g, h1, h2 = K.gram_keys(t, nn_)
                 s1, s2 = h1.view(np.int64), h2.view(np.int64)
-                phr, o1, o2 = [], [], []
-                s = 0
-                for toks, cn in zip(col, counts):
-                    if not cn:
-                        continue
-                    if cand is None:
-                        # full-report recovery: every occurrence (key
-                        # columns sliced, no per-gram Python)
-                        ts = [t for t in toks if t]
-                        js, off = _doc_gram_offsets(ts, nn_)
-                        phr.extend(js[off[i]:off[i + nn_] - 1]
-                                   for i in range(cn))
-                        o1.append(s1[s:s + cn])
-                        o2.append(s2[s:s + cn])
-                    else:
-                        # candidate mode: vectorized h1 coarse cut,
-                        # exact pair confirm, per-task key-dedup
-                        idx = np.nonzero(np.isin(s1[s:s + cn],
-                                                 cand[0]))[0]
-                        if len(idx):
-                            ts = [t for t in toks if t]
-                            js, off = _doc_gram_offsets(ts, nn_)
-                            for i in idx:
-                                key = (int(s1[s + i]), int(s2[s + i]))
-                                if key not in cand[1] or key in seen:
-                                    continue
-                                seen.add(key)
-                                phr.append(js[off[i]:off[i + nn_] - 1])
-                                o1.append(np.array([key[0]],
-                                                   dtype=np.int64))
-                                o2.append(np.array([key[1]],
-                                                   dtype=np.int64))
-                    s += cn
-                if phr:
-                    yield pd.DataFrame({"phrase": phr,
-                                        "__h1": np.concatenate(o1),
-                                        "__h2": np.concatenate(o2)})
+                sel = (np.arange(len(g)) if cand is None
+                       else K.candidate_hits(s1, s2, cand, seen))
+                if len(sel):
+                    g = g[sel]
+                    yield pa.RecordBatch.from_arrays(
+                        [K.slice_strings(t.buf, t.st[g], t.en[g + nn_ - 1]),
+                         pa.array(s1[sel]), pa.array(s2[sel])],
+                        names=["phrase", "__h1", "__h2"])
 
-        rec = toks_src.mapInPandas(
+        rec = toks_src.mapInArrow(
             _emit_phr, "phrase string, __h1 long, __h2 long")
         return (rec.join(matches, ["__h1", "__h2"])
                 .groupBy("__h1", "__h2", "freq")

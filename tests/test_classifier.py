@@ -124,6 +124,24 @@ def test_hash_families_score_consistently(spark, toy_df):
         assert acc >= 0.9, fam
 
 
+def test_unknown_hash_family_rejected(spark, toy_df):
+    """A family typo raises before any Spark job instead of silently
+    scoring with the portable family."""
+    sc = spark.sparkContext
+    before = len(sc.statusTracker().getJobIdsForGroup())
+    col = F.col("text")
+    for call in (lambda: C.hashed_features(col, 8, hash_family="xxhash"),
+                 lambda: C.margin_expr(col, [0.0] * 8, 0.0,
+                                       hash_family="xxhash"),
+                 lambda: C.score_expr(col, [0.0] * 8, 0.0,
+                                      hash_family="xxhash"),
+                 lambda: C.train_logreg(toy_df, "label", dim=8, iters=1,
+                                        hash_family="xxhash")):
+        with pytest.raises(ValueError, match="hash_family"):
+            call()
+    assert len(sc.statusTracker().getJobIdsForGroup()) == before
+
+
 def test_model_save_load_roundtrip(spark, toy_df, tmp_path):
     model = C.train_logreg(toy_df, "label", dim=16, iters=2,
                            hash_family="portable")

@@ -424,19 +424,40 @@ def test_novelty_scores_golden(spark):
     assert (got[4]["n_grams"], got[4]["n_shared"], got[4]["novelty"]) == (0, 0, 1.0)
 
 
+def novelty_scores_exact(df, id_col="doc_id", text_col="text", n=5):
+    """String-keyed reference for `novelty_scores`: the same plan shape
+    keyed on the gram TEXT (arrow_shingles) instead of the 128-bit
+    hashed key — the differential reference for the hashed contract."""
+    from juliadb_jl_spark.functions.text import arrow_shingles
+    arr = F.array_distinct(arrow_shingles(F.col(text_col), n))
+    grams = df.select(F.col(id_col), F.explode(arr).alias("__g"))
+    per_doc = df.select(F.col(id_col),
+                        F.size(arr).cast("long").alias("n_grams"))
+    uniq = (grams.groupBy("__g")
+            .agg(F.count(F.lit(1)).alias("__df"),
+                 F.min(id_col).alias("__owner"))
+            .filter(F.col("__df") == 1)
+            .groupBy(F.col("__owner").alias(id_col))
+            .agg(F.count(F.lit(1)).alias("__nu")))
+    return (per_doc.join(uniq, id_col, "left")
+            .select(id_col, "n_grams",
+                    (F.col("n_grams") - F.coalesce(F.col("__nu"), F.lit(0)))
+                    .alias("n_shared"))
+            .withColumn("novelty",
+                        F.when(F.col("n_grams") > 0,
+                               1 - F.col("n_shared") / F.col("n_grams"))
+                        .otherwise(F.lit(1.0))))
+
+
 def test_novelty_scores_hashed_equals_exact(spark, tables):
-    """method='exact' (gram-text keys, the pre-r6 shape) is the
-    differential escape hatch for the hashed probabilistic contract —
-    both must agree on real data (ADVICE r6)."""
+    """The hashed gram keys agree with the string-keyed reference on
+    real data (ADVICE r6)."""
     docs = tables["documents"].df
     def key(rows):
         return sorted((r["doc_id"], r["n_grams"], r["n_shared"],
                        round(r["novelty"], 9)) for r in rows)
     assert key(CU.novelty_scores(docs, "doc_id", n=5).collect()) == \
-        key(CU.novelty_scores(docs, "doc_id", n=5,
-                              method="exact").collect())
-    with pytest.raises(ValueError):
-        CU.novelty_scores(docs, "doc_id", method="flux")
+        key(novelty_scores_exact(docs, "doc_id", n=5).collect())
 
 
 # ---------------------------------------------------------------------------

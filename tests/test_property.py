@@ -571,11 +571,12 @@ def test_frequent_phrases_matches_brute_force_on_nasty_text(
 @settings(max_examples=6, deadline=None,
           suppress_health_check=list(HealthCheck))
 def test_novelty_hashed_matches_exact_on_nasty_text(spark, rows):
-    """r8 fused poly128 gram keys ≡ the string-keyed exact path on
+    """r8 fused poly128 gram keys ≡ the string-keyed reference on
     exotic whitespace/unicode/empty docs — pins the Python
     tokenize+lane build (and the twin distinct-count divisor) against
     the declarative arrow_shingles shape, example by example."""
     from juliadb_jl_spark.functions.curation import novelty_scores
+    from tests.test_curation import novelty_scores_exact
     df = spark.createDataFrame([(i, t) for i, _, t in rows],
                                "doc_id long, text string")
 
@@ -584,4 +585,4 @@ def test_novelty_hashed_matches_exact_on_nasty_text(spark, rows):
                        round(r["novelty"], 9)) for r in out.collect())
 
     assert key(novelty_scores(df, "doc_id", n=3)) == \
-        key(novelty_scores(df, "doc_id", n=3, method="exact"))
+        key(novelty_scores_exact(df, "doc_id", n=3))
